@@ -82,7 +82,7 @@ NAMES = (
 
 
 def main() -> None:
-    spark = get_spark("dump_plans", cpus=8)
+    spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     out = ["# Physical plans (explain formatted)\n"]
     out.append(

@@ -11,7 +11,7 @@ from wallaby2caom2_spark import datagen, oracle
 def spark():
     from wallaby2caom2_spark.session import get_spark
 
-    s = get_spark(app_name="w2c2s-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="w2c2s-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -159,20 +159,27 @@ def test_null_sr_headerless_pcm_contained_in_every_operator(spark):
     assert row["fp_ok"] is False
 
 
-def test_decode_null_declared_rate_is_contained(spark):
-    """A NULL sr_hz arrives in the Arrow batch as NaN (nullable int →
-    float64); the decode UDF must treat it as 'no declared rate' — the
-    measured rate wins — instead of raising int(NaN)."""
-    from wallaby2caom2_spark.operators.decode import with_decode_features
+@pytest.mark.parametrize(
+    "adapter", ["with_fused_features", "with_fused_features_retaining"]
+)
+def test_decode_null_declared_rate_is_contained(spark, adapter):
+    """A NULL sr_hz arrives as None (Arrow) or NaN (pandas: nullable int →
+    float64); both feature adapters must treat it as 'no declared rate' —
+    the measured rate wins — instead of raising int(NaN). A NULL transcript
+    is contained the same way."""
+    from wallaby2caom2_spark.operators import fused_stage
 
     sig = _sig(n=1600, sr=16000)
     df = spark.createDataFrame(
         [
             ("a", bytearray(audio.encode_wav(sig, 16000)), None, 100, "wav", ""),
             ("b", bytearray(audio.encode_wav(sig, 16000)), 16000, 100, "wav", ""),
+            ("c", bytearray(audio.encode_wav(sig, 16000)), None, 100, "wav", None),
         ],
         schema="clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
     )
-    out = {r["clip_id"]: r for r in with_decode_features(df).collect()}
+    out = {r["clip_id"]: r for r in getattr(fused_stage, adapter)(df).collect()}
     assert out["a"]["pcm_ok"] and out["a"]["sr_meas"] == 16000
     assert out["b"]["pcm_ok"] and out["b"]["sr_meas"] == 16000
+    assert out["c"]["pcm_ok"] and out["c"]["sr_meas"] == 16000
+    assert out["c"]["lang"] == "und" and out["c"]["scrubbed_all"] is None

@@ -111,7 +111,7 @@ def test_export_plan_is_join_free_and_payload_shuffle_free(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from wallaby2caom2_spark import datagen
-    from wallaby2caom2_spark.operators import cascade, text_stage
+    from wallaby2caom2_spark.operators import cascade
     from wallaby2caom2_spark.operators.features import feature_frames
     from wallaby2caom2_spark.operators.fused_stage import (
         with_fused_features_retaining,
@@ -120,12 +120,7 @@ def test_export_plan_is_join_free_and_payload_shuffle_free(spark, tmp_path):
     inp = str(tmp_path / "clips")
     datagen.write_clips_parquet(inp, 50, seed=3, rows_per_file=50)
     clips = spark.read.parquet(inp)
-    labeled = (
-        clips.transform(with_fused_features_retaining)
-        .transform(cascade.with_transcript_stats)
-        .transform(lambda d: cascade.with_keep_drop(d))
-        .transform(text_stage.mask_scrub)
-    )
+    labeled = cascade.label(with_fused_features_retaining(clips))
     kept = labeled.filter(F.col("keep")).select(
         "clip_id", "bytes", "codec", "sr_hz", "lang", "scrubbed_transcript"
     )

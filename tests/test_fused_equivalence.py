@@ -1,33 +1,84 @@
-"""The fused single-crossing stage and the split decode→text composition
-must produce identical results (same functions/, different plan shapes) —
-this keeps the composable operators from bitrotting while the pipeline
-defaults to the fused path."""
+"""The quality-feature kernel and its adapters.
+
+``features_batch`` is checked against the serial oracle labeler without
+Spark; the two Spark adapters (mapInArrow, payload-retaining scalar UDF) and
+``kept_clips`` are checked against each other and against ``quality_filter``.
+"""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pytest
+
+from wallaby2caom2_spark import datagen, oracle
+from wallaby2caom2_spark.functions import scrub
+from wallaby2caom2_spark.operators.fused_stage import (
+    FEATURE_FIELDS,
+    _binary_views,
+    features_batch,
+)
 from wallaby2caom2_spark.plans.pipeline import quality_filter
 
+# the kernel fields the oracle labeler also reports (scrub is masked there)
+ORACLE_FIELDS = [
+    "pcm_ok", "sr_meas", "dur_ms_meas", "rms", "clip_rate", "dropout_ms",
+    "lang", "lang_conf", "ppl",
+]
 
-def _key(rows):
-    return {
-        r["clip_id"]: (
-            r["keep"],
-            r["drop_reason"],
-            r["scrubbed_transcript"],
-            r["scrub_edits"],
-            r["lang"],
-            round(float(r["ppl"]), 6),
-            r["pcm_ok"],
-            r["dur_ms_meas"],
+
+def _kernel_rows(payloads, rows):
+    feats = features_batch(
+        payloads,
+        [r["codec"] for r in rows],
+        [r["sr_hz"] for r in rows],
+        [r["transcript"] for r in rows],
+    )
+    assert list(feats) == [f.name for f in FEATURE_FIELDS]
+    return [dict(zip(feats, vals)) for vals in zip(*feats.values())]
+
+
+@pytest.fixture(scope="module")
+def edge_rows():
+    rows = list(datagen.generate_rows(200, seed=11))
+    rows[0]["sr_hz"] = None
+    rows[1]["sr_hz"] = float("nan")  # NULL as pandas hands it over
+    rows[2]["transcript"] = None
+    rows[3]["bytes"] = None
+    rows[4]["bytes"] = rows[4]["bytes"][:30]  # truncated container
+    rows[5]["bytes"] = rows[5]["bytes"][:-1]  # odd-length PCM/WAV tail
+    rows[6]["codec"] = None
+    return rows
+
+
+def test_features_batch_matches_oracle(edge_rows):
+    """Every kernel field equals the serial labeler's value for the same
+    row, including NULL declared rates, NULL transcripts, NULL and
+    truncated payloads; the unmasked scrub output equals scrub_one."""
+    got = _kernel_rows([r["bytes"] for r in edge_rows], edge_rows)
+    for row, feats in zip(edge_rows, got):
+        sr = row["sr_hz"]
+        exp = oracle.label_row({**row, "sr_hz": None if sr != sr else sr})
+        assert {k: feats[k] for k in ORACLE_FIELDS} == {
+            k: exp[k] for k in ORACLE_FIELDS
+        }, row["clip_id"]
+        assert (feats["scrubbed_all"], feats["scrub_edits_all"]) == scrub.scrub_one(
+            row["transcript"]
         )
-        for r in rows
-    }
+    assert not got[3]["pcm_ok"] and not got[4]["pcm_ok"]
 
 
-def test_fused_equals_split(spark, clips_df):
-    fused = _key(quality_filter(clips_df, fused=True).collect())
-    split = _key(quality_filter(clips_df, fused=False).collect())
-    assert fused == split
+def test_features_batch_payload_layouts(edge_rows):
+    """bytes, memoryviews and zero-copy views of plain, sliced and
+    large_binary Arrow arrays all give the same features."""
+    payloads = [r["bytes"] for r in edge_rows]
+    expect = _kernel_rows(payloads, edge_rows)
+    views = [None if p is None else memoryview(p) for p in payloads]
+    assert _kernel_rows(views, edge_rows) == expect
+    for typ in (pa.binary(), pa.large_binary()):
+        arr = pa.array(payloads, type=typ)
+        assert _kernel_rows(_binary_views(arr), edge_rows) == expect
+        sl = arr.slice(2, 50)
+        assert _kernel_rows(_binary_views(sl), edge_rows[2:52]) == expect[2:52]
 
 
 def test_kept_clips_matches_quality_filter(spark, clips_df):

@@ -4,9 +4,9 @@ Pure numpy, deterministic, built at import time from an embedded seed corpus
 (no external model files: the container has no fastText binary, so this plays
 its role — same architecture: hashed char n-grams → linear scores → softmax).
 
-The model is *shared* by the Spark iterator pandas-UDF stage
-(operators/langid_stage.py, loaded once per executor python worker) and the
-pure-Python oracle labeler, mirroring how the reference dispatches the same
+The model is *shared* by the Spark feature kernel
+(operators/fused_stage.py ``features_batch``, loaded once per executor
+python worker) and the pure-Python oracle labeler, mirroring how the reference dispatches the same
 ``get_*()`` blueprint functions from both its pipeline and its golden tests
 (``wallaby2caom2/main_app.py:126,159-198``).
 """
@@ -148,8 +148,8 @@ _LOGPROB: np.ndarray = _build_model()
 
 def buckets_batch(texts: list[str | None]) -> list[np.ndarray | None]:
     """Per-text trigram buckets, computed once and shared by langid AND the
-    perplexity LM (operators/text_stage.py) — hashing is ~30% of the text
-    stage, so the fused pipeline pays it once."""
+    perplexity LM (functions/textscore.py) — hashing is ~30% of the text
+    scoring, so the feature kernel pays it once."""
     return [_trigram_buckets(t) if t else None for t in texts]
 
 
@@ -169,7 +169,7 @@ def predict_from_buckets(
     # Single implementation lives in textscore.score_from_buckets (fused
     # row-major gather shared with the perplexity LM — see that module's
     # docstring for the cache-line analysis); this wrapper keeps the split
-    # API for the oracle labeler and the composable langid_stage.
+    # API for the oracle labeler.
     from .textscore import score_from_buckets
 
     langs, confs, _ = score_from_buckets(bucket_list)

@@ -6,7 +6,8 @@ practice: the LM is built at import time from the langid seed corpora of the
 every executor python worker reconstructs the identical table
 deterministically on first import.
 
-Shared by the Spark stage (operators/langid_stage.py) and the oracle labeler.
+Shared by the Spark feature kernel (operators/fused_stage.py) and the oracle
+labeler.
 """
 
 from __future__ import annotations

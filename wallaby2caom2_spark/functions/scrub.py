@@ -19,8 +19,8 @@ what it covers); tests/test_scrub.py pins the overlap behavior. Single-pass
 is ~5x less regex work (~0.26 → ~0.06 ms/row on 1 KB transcripts), and
 scrub is the hottest python stage.
 
-Shared by the Spark text stage (operators/text_stage.py, compiled once per
-executor worker at import) and the oracle labeler.
+Shared by the Spark feature kernel (operators/fused_stage.py, compiled once
+per executor worker at import) and the oracle labeler.
 """
 
 from __future__ import annotations

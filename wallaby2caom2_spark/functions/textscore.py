@@ -16,7 +16,7 @@ reduction is a single ``np.add.reduceat`` over the concatenated buckets
 instead of a per-row numpy call. Measured at 32-way process concurrency on
 the same batch shape: 108 us/row (split scorers) → 47 us/row (this module).
 
-All public paths (pipeline fused stage, split stages, oracle labeler,
+All public paths (the pipeline's feature kernel, oracle labeler,
 ``predict_batch``/``perplexity_batch``) route through ``score_from_buckets``
 so pipeline↔oracle agreement stays exact by construction — the same
 single-implementation contract the reference keeps by dispatching the same

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions import audio
+from .fused_stage import CLIP_FIELDS, FUSED_SCHEMA, features_batch
 from .spectral import _clip_spectrum
 from .vad import _clip_vad
 
@@ -164,25 +165,7 @@ def audio_signals(
 
 
 QUALITY_SIGNALS_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-        # quality-filter features (same fields the fused flagship stage emits)
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
-    ]
+    FUSED_SCHEMA.fields
     + [f for f in SIGNALS_SCHEMA.fields if f.name != "clip_id"]
 )
 
@@ -212,11 +195,10 @@ def quality_and_signals(
     clips, then ``audio_signals`` over survivors) stitched by a
     ``clips ⋈ kept_ids`` semi-join — a second full read of the payload
     column and, past broadcast scale, a payload shuffle. This pass reads
-    each clip once, computes the decode-sanity struct
-    (``audio.decode_features`` — byte-identical to the flagship stage), the
-    text models, and the fingerprint/VAD/spectral signals (shared
-    ``_SignalArrays`` helper — byte-identical to ``audio_signals``), so the
-    whole funnel downstream is codegen + slim joins.
+    each clip once, computes the quality features (``features_batch``, the
+    flagship stage's own kernel) and the fingerprint/VAD/spectral signals
+    (shared ``_SignalArrays`` helper — byte-identical to ``audio_signals``),
+    so the whole funnel downstream is codegen + slim joins.
 
     By default the expensive signal block (fingerprint FFT + Welch
     spectrum + VAD) is SKIPPED for clips the quality cascade is about to
@@ -245,7 +227,7 @@ def quality_and_signals(
     (U+001C-001F), and every OTHER rule compares the bit-identical values
     this pass itself emits, so only ``repetition`` could mispredict.
 
-    The container header is parsed twice per clip (decode_features + the
+    The container header is parsed twice per clip (the kernel's decode + the
     signal decode) — both return zero-copy int16 views, so no sample data
     is copied either time."""
     from ..config import DEFAULT_CONFIG
@@ -253,61 +235,39 @@ def quality_and_signals(
     gate_cfg = cfg if cfg is not None else DEFAULT_CONFIG
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import scrub, textscore
         from ..oracle import drop_reason_from_features, transcript_shape
 
         for pdf in batches:
             n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            srm = np.zeros(n, dtype=np.int32)
-            dur = np.zeros(n, dtype=np.int32)
-            rms = np.zeros(n, dtype=np.float64)
-            clip = np.zeros(n, dtype=np.float64)
-            dropm = np.zeros(n, dtype=np.float64)
-            sig = _SignalArrays(n)
-            texts = [
-                t if isinstance(t, str) else None for t in pdf["transcript"]
-            ]
-            # text models first: the skip-dropped gate needs lang/ppl
-            langs, confs, ppls = textscore.score_batch(texts)
-            out_t, out_n = scrub.scrub_batch(texts)
+            texts = pdf["transcript"].tolist()
+            f = features_batch(pdf["bytes"], pdf["codec"], pdf["sr_hz"], texts)
+            # python scalars: the gate compares exactly as the labeler does
+            ok, srm, dur, rms, clip, dropm, lang, conf, ppl = (
+                f[k].tolist()
+                for k in (
+                    "pcm_ok", "sr_meas", "dur_ms_meas", "rms", "clip_rate",
+                    "dropout_ms", "lang", "lang_conf", "ppl",
+                )
+            )
             dur_decl = pdf["dur_ms"].to_numpy()
+            sig = _SignalArrays(n)
             for i, (raw, codec, sr_decl) in enumerate(
                 zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
             ):
-                sr_d = audio.declared_sr(sr_decl)
-                o, s, d, r, c, dm = audio.decode_features(raw, codec, sr_d)
-                ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = (
-                    o, s, d, r, c, dm,
-                )
                 if not signals_for_dropped:
                     n_chars, rep_ratio = transcript_shape(texts[i])
                     reason = drop_reason_from_features(
                         codec, _opt_int(sr_decl), _opt_int(dur_decl[i]),
-                        o, s, d, r, c, dm, n_chars, rep_ratio,
-                        ppls[i], langs[i], confs[i], gate_cfg,
+                        ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i],
+                        n_chars, rep_ratio, ppl[i], lang[i], conf[i], gate_cfg,
                     )
                     if reason is not None and reason != "repetition":
                         continue  # containment defaults, like undecodable
                 sig.fill_row(i, raw, codec, sr_decl, frame_ms, hop_ms, gate_db)
             yield pd.DataFrame(
                 {
-                    "clip_id": pdf["clip_id"],
-                    "sr_hz": pdf["sr_hz"],
-                    "dur_ms": pdf["dur_ms"],
-                    "codec": pdf["codec"],
-                    "transcript": pdf["transcript"],
-                    "pcm_ok": ok,
-                    "sr_meas": srm,
-                    "dur_ms_meas": dur,
-                    "rms": rms,
-                    "clip_rate": clip,
-                    "dropout_ms": dropm,
-                    "lang": langs,
-                    "lang_conf": confs,
-                    "ppl": ppls,
-                    "scrubbed_all": pd.array(out_t, dtype="string"),
-                    "scrub_edits_all": pd.array(out_n, dtype="int32"),
+                    **{c.name: pdf[c.name] for c in CLIP_FIELDS},
+                    **f,
                     **sig.columns(n),
                 }
             )

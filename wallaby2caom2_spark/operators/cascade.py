@@ -90,3 +90,25 @@ def with_keep_drop(
     return df.withColumn("drop_reason", reason).withColumn(
         "keep", F.col("drop_reason").isNull()
     )
+
+
+def mask_scrub(df: DataFrame, keep_col: str = "keep") -> DataFrame:
+    """Post-cascade: kept rows expose the scrub output, dropped rows carry
+    NULL text / 0 edits (the oracle labeler's contract)."""
+    return (
+        df.withColumn(
+            "scrubbed_transcript",
+            F.when(F.col(keep_col), F.col("scrubbed_all")),
+        )
+        .withColumn(
+            "scrub_edits",
+            F.when(F.col(keep_col), F.col("scrub_edits_all")).otherwise(F.lit(0)),
+        )
+        .drop("scrubbed_all", "scrub_edits_all")
+    )
+
+
+def label(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Feature rows → labeled rows: transcript stats, the keep/drop cascade,
+    then the scrub mask — every codegen step after the feature kernel."""
+    return mask_scrub(with_keep_drop(with_transcript_stats(df), cfg))

@@ -1,28 +1,34 @@
-"""Single-crossing UDF stage: decode + langid + perplexity + scrub in ONE
-mapInArrow pass.
+"""The quality-feature kernel and its two Spark adapters.
 
-Why one crossing: chained pandas UDFs (decode → text models) each round-trip
-every batch JVM→Arrow→Python→Arrow→JVM. On a bandwidth-bound host the extra
-memcpy is the difference between 3x and 4x scaling at 32 cores — and at
-10^12 rows it is pure waste. This stage reads each Arrow batch once,
-computes every python-side feature, and returns slim rows WITHOUT the
-payload bytes (the binary column dies inside the worker, so it never
-crosses back or shuffles).
+Reference analog: the per-item visitor chain — header read S5
+(``FileMetadataReader`` / ``make_headers_from_file``,
+``wallaby2caom2/tests/test_caom_gen_visit.py:99-102``) then value repair P15
+(``ValueRepairCache``, ``wallaby2caom2/main_app.py:84-96``) — re-expressed as
+ONE batch kernel, ``features_batch``: decode sanity per clip, langid +
+perplexity and scrub once per batch. Errors never fail the job: an
+undecodable payload yields ``pcm_ok=false`` (the reference's per-item
+try/except containment, ``wallaby2caom2/main_app.py:256-263``).
 
-Why mapInArrow rather than mapInPandas: the Arrow→pandas conversion of the
-binary column materializes one Python ``bytes`` object per clip — a ~50 KB
-allocation + memcpy per row that measured ~2.0s of a 6.1s sf0.1/local[32]
-pipeline run (profiled via a no-op mapInPandas over ``bytes`` vs the same
-scan JVM-side). Operating on the raw Arrow RecordBatch instead lets decode
-read each payload as a ZERO-COPY memoryview into the batch's data buffer
-(offsets sliced from the offsets buffer), and the passthrough columns
-(clip_id, codec, transcript, declared sr/dur) are re-emitted as the input's
-own Arrow arrays — no conversion in either direction. Only the computed
-feature vectors are newly allocated.
+The kernel is Spark-free; two thin adapters put it behind exactly one
+JVM→Python crossing each:
 
-Semantics are identical to operators/decode.py + operators/text_stage.py
-(shared functions/ modules); the split stages remain for composability and
-are covered by the same golden tests (tests/test_fused_equivalence.py).
+- ``with_fused_features`` (mapInArrow, the flagship): reads each Arrow
+  batch once and returns slim rows WITHOUT the payload bytes (the binary
+  column dies inside the worker, so it never crosses back or shuffles).
+  mapInArrow rather than mapInPandas because the Arrow→pandas conversion
+  of the binary column materializes one Python ``bytes`` object per clip —
+  a ~50 KB allocation + memcpy per row that measured ~2.0s of a 6.1s
+  sf0.1/local[32] pipeline run. Here decode reads each payload as a
+  ZERO-COPY memoryview into the batch's data buffer, and the passthrough
+  columns are re-emitted as the input's own Arrow arrays; only the computed
+  feature vectors are newly allocated.
+- ``with_fused_features_retaining`` (scalar pandas UDF): the payload stays
+  in the JVM row and only the slim feature struct comes back — the building
+  block of the zero-Exchange kept-clips path.
+
+The curation pass (operators/audio_signals.py ``quality_and_signals``) calls
+the same kernel inside its own mapInPandas. Every feature schema derives
+from ``FEATURE_FIELDS``.
 """
 
 from __future__ import annotations
@@ -35,27 +41,75 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-FUSED_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
-    ]
-)
+# declared clip columns the mapInArrow stage passes through unchanged
+CLIP_FIELDS = [
+    T.StructField("clip_id", T.StringType()),
+    T.StructField("sr_hz", T.IntegerType()),
+    T.StructField("dur_ms", T.IntegerType()),
+    T.StructField("codec", T.StringType()),
+    T.StructField("transcript", T.StringType()),
+]
+
+# the columns features_batch returns, in this order
+FEATURE_FIELDS = [
+    T.StructField("pcm_ok", T.BooleanType()),
+    T.StructField("sr_meas", T.IntegerType()),
+    T.StructField("dur_ms_meas", T.IntegerType()),
+    T.StructField("rms", T.DoubleType()),
+    T.StructField("clip_rate", T.DoubleType()),
+    T.StructField("dropout_ms", T.DoubleType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("lang_conf", T.FloatType()),
+    T.StructField("ppl", T.DoubleType()),
+    T.StructField("scrubbed_all", T.StringType()),
+    T.StructField("scrub_edits_all", T.IntegerType()),
+]
+
+FEATURES_SCHEMA = T.StructType(FEATURE_FIELDS)
+FUSED_SCHEMA = T.StructType(CLIP_FIELDS + FEATURE_FIELDS)
+_OUT_PA_SCHEMA = to_arrow_schema(FUSED_SCHEMA)
+_FEATURES_PA_SCHEMA = to_arrow_schema(FEATURES_SCHEMA)
+
+
+def features_batch(payloads, codecs, declared_sr, texts: list) -> dict:
+    """One batch of clips → ``{field name: column}`` for ``FEATURE_FIELDS``.
+
+    ``payloads`` are bytes-like (``bytes`` or zero-copy ``memoryview``) or
+    None; ``declared_sr`` values may be NULL in any spelling a batch format
+    hands over (None, or NaN through pandas) — ``audio.declared_sr`` reads
+    them as "no declared rate". ``texts`` are str or None. Numeric columns
+    are typed numpy arrays, string columns object sequences with None for
+    NULL."""
+    # worker-side imports: models/tables built once per python worker process
+    from ..functions import audio, scrub, textscore
+
+    n = len(texts)
+    ok = np.zeros(n, dtype=bool)
+    srm = np.zeros(n, dtype=np.int32)
+    dur = np.zeros(n, dtype=np.int32)
+    rms = np.zeros(n, dtype=np.float64)
+    clip = np.zeros(n, dtype=np.float64)
+    dropm = np.zeros(n, dtype=np.float64)
+    for i, (raw, codec, sr) in enumerate(zip(payloads, codecs, declared_sr)):
+        o, s, d, r, c, dm = audio.decode_features(raw, codec, audio.declared_sr(sr))
+        ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = o, s, d, r, c, dm
+    langs, confs, ppls = textscore.score_batch(texts)  # hash+gather once
+    out_t, out_n = scrub.scrub_batch(texts)
+    return {
+        "pcm_ok": ok,
+        "sr_meas": srm,
+        "dur_ms_meas": dur,
+        "rms": rms,
+        "clip_rate": clip,
+        "dropout_ms": dropm,
+        "lang": langs,
+        "lang_conf": confs,
+        "ppl": ppls,
+        "scrubbed_all": out_t,
+        "scrub_edits_all": np.asarray(out_n, dtype=np.int32),
+    }
 
 
 def _binary_views(arr: pa.Array) -> list:
@@ -81,74 +135,20 @@ def _binary_views(arr: pa.Array) -> list:
     ]
 
 
-_OUT_PA_SCHEMA = pa.schema(
-    [
-        pa.field("clip_id", pa.string()),
-        pa.field("sr_hz", pa.int32()),
-        pa.field("dur_ms", pa.int32()),
-        pa.field("codec", pa.string()),
-        pa.field("transcript", pa.string()),
-        pa.field("pcm_ok", pa.bool_()),
-        pa.field("sr_meas", pa.int32()),
-        pa.field("dur_ms_meas", pa.int32()),
-        pa.field("rms", pa.float64()),
-        pa.field("clip_rate", pa.float64()),
-        pa.field("dropout_ms", pa.float64()),
-        pa.field("lang", pa.string()),
-        pa.field("lang_conf", pa.float32()),
-        pa.field("ppl", pa.float64()),
-        pa.field("scrubbed_all", pa.string()),
-        pa.field("scrub_edits_all", pa.int32()),
-    ]
-)
-
-
 def fused_features_arrow(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
-    # worker-side imports: models/tables built once per python worker process
-    from ..functions import audio, scrub, textscore
-
     for batch in batches:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        n = batch.num_rows
-        ok = np.zeros(n, dtype=bool)
-        srm = np.zeros(n, dtype=np.int32)
-        dur = np.zeros(n, dtype=np.int32)
-        rms = np.zeros(n, dtype=np.float64)
-        clip = np.zeros(n, dtype=np.float64)
-        dropm = np.zeros(n, dtype=np.float64)
-        codec_v = cols["codec"].to_pylist()
-        # fill_null(0): a NULL declared rate must land as "no rate" (decode
-        # fails sanity anyway), not as a NaN that breaks the int() cast
-        sr_v = cols["sr_hz"].fill_null(0).to_numpy(zero_copy_only=False)
-        for i, view in enumerate(_binary_views(cols["bytes"])):
-            o, s, d, r, c, dm = audio.decode_features(view, codec_v[i], int(sr_v[i]))
-            ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = o, s, d, r, c, dm
-
-        texts = cols["transcript"].to_pylist()
-        langs, confs, ppls = textscore.score_batch(texts)  # hash+gather once
-        out_t, out_n = scrub.scrub_batch(texts)
-
+        cols = dict(zip(batch.schema.names, batch.columns))
+        feats = features_batch(
+            _binary_views(cols["bytes"]),
+            cols["codec"].to_pylist(),
+            cols["sr_hz"].to_pylist(),
+            cols["transcript"].to_pylist(),
+        )
         yield pa.RecordBatch.from_arrays(
-            [
-                cols["clip_id"],
-                cols["sr_hz"],
-                cols["dur_ms"],
-                cols["codec"],
-                cols["transcript"],
-                pa.array(ok),
-                pa.array(srm),
-                pa.array(dur),
-                pa.array(rms),
-                pa.array(clip),
-                pa.array(dropm),
-                pa.array(langs.tolist(), type=pa.string()),
-                pa.array(confs),
-                pa.array(ppls),
-                pa.array(out_t, type=pa.string()),
-                pa.array(out_n, type=pa.int32()),
-            ],
+            [cols[f.name] for f in CLIP_FIELDS]
+            + [pa.array(feats[f.name], type=f.type) for f in _FEATURES_PA_SCHEMA],
             schema=_OUT_PA_SCHEMA,
         )
 
@@ -163,77 +163,24 @@ def with_fused_features(df: DataFrame) -> DataFrame:
     return df.select(*cols).mapInArrow(fused_features_arrow, FUSED_SCHEMA)
 
 
-# ---------------------------------------------------------------------------
-# payload-retaining variant (scalar pandas UDF)
-# ---------------------------------------------------------------------------
-
-FUSED_UDF_SCHEMA = T.StructType(
-    [
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(FUSED_UDF_SCHEMA)
+@F.pandas_udf(FEATURES_SCHEMA)
 def fused_features_udf(
     batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
 ) -> Iterator[pd.DataFrame]:
-    """Scalar-UDF form of the fused stage: same ONE JVM→Python crossing, but
-    the original row — including the payload — stays JVM-side. The payload
-    is serialized INTO the worker once (the decode needs the bytes anyway)
-    and only the slim feature struct comes back: nothing payload-sized ever
-    re-crosses Arrow or enters an exchange. Semantics are shared with the
-    mapInArrow form (same functions/ helpers), pinned by
-    tests/test_fused_equivalence.py."""
-    from ..functions import audio, scrub, textscore
-
+    """Scalar-UDF adapter: the payload is serialized INTO the worker once
+    (decode needs the bytes anyway) and only the slim feature struct comes
+    back — nothing payload-sized re-crosses Arrow or enters an exchange."""
     for payload, codec, sr, transcript in batches:
-        n = len(payload)
-        ok = np.zeros(n, dtype=bool)
-        srm = np.zeros(n, dtype=np.int32)
-        dur = np.zeros(n, dtype=np.int32)
-        rms = np.zeros(n, dtype=np.float64)
-        clip = np.zeros(n, dtype=np.float64)
-        dropm = np.zeros(n, dtype=np.float64)
-        codec_v = codec.to_numpy()
-        sr_v = sr.to_numpy()
-        for i, raw in enumerate(payload.to_numpy()):
-            o, s, d, r, c, dm = audio.decode_features(
-                raw, codec_v[i], audio.declared_sr(sr_v[i])
-            )
-            ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = o, s, d, r, c, dm
-        texts = [t if isinstance(t, str) else None for t in transcript.to_numpy()]
-        langs, confs, ppls = textscore.score_batch(texts)
-        out_t, out_n = scrub.scrub_batch(texts)
         yield pd.DataFrame(
-            {
-                "pcm_ok": ok,
-                "sr_meas": srm,
-                "dur_ms_meas": dur,
-                "rms": rms,
-                "clip_rate": clip,
-                "dropout_ms": dropm,
-                "lang": langs,
-                "lang_conf": confs,
-                "ppl": ppls,
-                "scrubbed_all": pd.array(out_t, dtype="string"),
-                "scrub_edits_all": pd.array(out_n, dtype="int32"),
-            }
+            features_batch(
+                payload.to_numpy(), codec.to_numpy(), sr.to_numpy(),
+                transcript.tolist(),
+            )
         )
 
 
 def with_fused_features_retaining(df: DataFrame) -> DataFrame:
-    """Append the fused feature struct while RETAINING every input column
+    """Append the feature struct while RETAINING every input column
     (notably ``bytes``) in the JVM row — the building block of the
     zero-Exchange kept-clips path (plans/pipeline.py ``kept_clips``).
     Use when a downstream stage needs survivor payloads: the alternative —

@@ -1,7 +1,7 @@
 """Video frame-sampling over opaque binary payloads (multimodal column).
 
 The third multimodal modality beside images (operators/multimodal.py) and
-audio (operators/decode.py): treat video as an opaque ``binary`` column
+audio (operators/fused_stage.py): treat video as an opaque ``binary`` column
 with typed header metadata, and implement frame-sample + per-frame feature
 extraction as an Arrow-batched ``mapInPandas`` worker. No video codec
 exists in this container, so the container format is the repo's own

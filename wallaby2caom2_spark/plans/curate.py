@@ -42,8 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG
-from ..operators import audio_fp, cascade, spectral, text_stage
+from ..operators import audio_fp, cascade, spectral
 from ..operators.audio_signals import quality_and_signals
 from ..operators.features import feature_frames
 from ..operators.partitioning import with_bucket
@@ -116,10 +115,9 @@ def _staged(
     # (curate_corpus) clean up via ``caches``; lazy callers (the funnel
     # query) leave the slim blocks to Spark's LRU.
     labeled = (
-        quality_and_signals(clips, signals_for_dropped=signals_for_dropped)
-        .transform(cascade.with_transcript_stats)
-        .transform(lambda d: cascade.with_keep_drop(d, DEFAULT_CONFIG))
-        .transform(text_stage.mask_scrub)
+        cascade.label(
+            quality_and_signals(clips, signals_for_dropped=signals_for_dropped)
+        )
         .withColumn(
             "gate_stage",
             F.when(~F.col("keep"), F.lit(None).cast("string"))

@@ -33,8 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG
-from ..operators import cascade, text_stage
+from ..operators import cascade
 from ..operators.features import feature_frames
 from ..operators.fused_stage import with_fused_features_retaining
 from ..operators.partitioning import with_bucket
@@ -69,12 +68,7 @@ def export_training_shards(
     # keep decision + scrub attach narrowly (payload stays JVM-side, zero
     # exchanges — same building block as plans/pipeline.kept_clips, kept
     # inline here because the lang/scrubbed columns must survive the filter)
-    labeled = (
-        clips.transform(with_fused_features_retaining)
-        .transform(cascade.with_transcript_stats)
-        .transform(lambda d: cascade.with_keep_drop(d, DEFAULT_CONFIG))
-        .transform(text_stage.mask_scrub)
-    )
+    labeled = cascade.label(with_fused_features_retaining(clips))
     kept_payload = labeled.filter(F.col("keep")).select(
         "clip_id", "bytes", "codec", "sr_hz", "lang", "scrubbed_transcript"
     )
@@ -226,12 +220,7 @@ def packed_shard_frame(
     from ..operators import packing
 
     clips = read_clips(spark, clips_path)
-    labeled = (
-        clips.transform(with_fused_features_retaining)
-        .transform(cascade.with_transcript_stats)
-        .transform(lambda d: cascade.with_keep_drop(d, DEFAULT_CONFIG))
-        .transform(text_stage.mask_scrub)
-    )
+    labeled = cascade.label(with_fused_features_retaining(clips))
     kept_payload = labeled.filter(F.col("keep")).select(
         "clip_id", "bytes", "codec", "sr_hz", "lang",
         "scrubbed_transcript", "dur_ms_meas",

@@ -5,18 +5,18 @@ per-item loop — name-build → store → read existing → meta visit → writ
 bookkeeping (``wallaby2caom2/composable.py:115-138``) — this module declares
 the same dataflow once, over all rows:
 
-    scan → decode UDF (narrow, per input split) → DROP bytes
-    → salted repartition of slim rows (the ONLY shuffle) → langid UDF
-    → transcript stats (codegen) → rule cascade (codegen) → scrub UDF
-    → result projection  [+ metrics aggregation as a separate action]
+    scan → fused feature stage (ONE mapInArrow: decode + langid/perplexity
+    + scrub; bytes die in the worker) → transcript stats + rule cascade +
+    scrub mask (codegen, same narrow stage) → result projection
+    → salted repartition of slim result rows (the ONLY shuffle)
+    [+ metrics aggregation as a separate action]
 
 Ordering rationale (100 TB design): the audio payload dominates row size
 (~50 KB vs ~300 B for everything else), so ``bytes`` must NEVER cross a
-shuffle — decode runs as a narrow stage over the scan's own splits (parquet
+shuffle — the feature stage runs narrow over the scan's own splits (parquet
 splits are size-balanced by construction, so byte-level work is even without
-a shuffle), and only the slim decoded+text rows are salt-repartitioned to
-even out row-count work for the text stages. The three pandas UDFs are the
-only JVM↔Python crossings, all Arrow-batched.
+a shuffle), and only the final slim rows are salt-repartitioned to balance
+the sink. The fused stage is the only JVM↔Python crossing, Arrow-batched.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators import cascade, decode, fused_stage, partitioning, text_stage
+from ..operators import cascade, fused_stage, partitioning
 
 RESULT_COLUMNS = [
     "clip_id",
@@ -50,40 +50,22 @@ def quality_filter(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     num_partitions: int | None = None,
     repartition: bool = True,
-    fused: bool = True,
 ) -> DataFrame:
     """clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript) → result rows.
 
-    ``fused=True`` (default): ONE mapInPandas crossing computes decode +
-    text-model features per scan split (bytes die inside the worker), the
-    transcript stats + rule cascade + scrub mask run in codegen on the SAME
-    narrow stage, and only the final slim result rows cross the one salted
-    exchange — ``transcript`` and the unmasked scrub text never shuffle
-    (dropped rows carry NULL text, so the exchange moves kept-row text
-    only). ``fused=False`` keeps the two-stage composition (decode →
-    shuffle → text models) — same semantics, used by the composability
-    tests; there the repartition must sit BEFORE the text UDFs (that path's
-    skew-kill is about balancing Python work), so transcript crosses.
-    Either way no payload byte ever crosses a shuffle.
+    ONE mapInArrow crossing computes decode + text-model features per scan
+    split (bytes die inside the worker), the transcript stats + rule
+    cascade + scrub mask run in codegen on the SAME narrow stage, and only
+    the final slim result rows cross the one salted exchange —
+    ``transcript`` and the unmasked scrub text never shuffle (dropped rows
+    carry NULL text, so the exchange moves kept-row text only). No payload
+    byte ever crosses a shuffle.
     """
-    n = num_partitions or clips.sparkSession.sparkContext.defaultParallelism * 2
-    if fused:
-        df = clips.transform(fused_stage.with_fused_features)
-    else:
-        df = clips.transform(decode.with_decode_features).drop("bytes")
-        if repartition:
-            # deterministic per-row salt: transcript alone is enough entropy
-            # to split duplicate hot clip_ids, and skips re-hashing the
-            # other feature columns in the exchange's hash projection
-            df = partitioning.salted_repartition(df, n, content_cols=("transcript",))
-        df = df.transform(text_stage.with_text_models)
-    df = (
-        df.transform(cascade.with_transcript_stats)
-        .transform(lambda d: cascade.with_keep_drop(d, cfg))
-        .transform(text_stage.mask_scrub)
-        .select(*RESULT_COLUMNS)
+    df = cascade.label(fused_stage.with_fused_features(clips), cfg).select(
+        *RESULT_COLUMNS
     )
-    if fused and repartition:
+    if repartition:
+        n = num_partitions or clips.sparkSession.sparkContext.defaultParallelism * 2
         # the exchange balances output rows for the sink regardless of key
         # skew / input layout; content-derived salt columns keep routing
         # deterministic across stage retries while splitting hot clip_ids
@@ -111,11 +93,7 @@ def kept_clips(clips: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFr
     tests/test_plan_shapes.py (no Exchange carries a payload column) and
     tests/test_fused_equivalence.py (same kept set as ``quality_filter``).
     """
-    labeled = (
-        clips.transform(fused_stage.with_fused_features_retaining)
-        .transform(cascade.with_transcript_stats)
-        .transform(lambda d: cascade.with_keep_drop(d, cfg))
-    )
+    labeled = cascade.label(fused_stage.with_fused_features_retaining(clips), cfg)
     return labeled.filter(F.col("keep")).select(*clips.columns)
 
 

@@ -3,15 +3,15 @@
 The engine is DataFrame-API-first, but the cascade + metrics are pure
 relational logic a user would just as naturally write as SQL over a view.
 This module expresses EXACTLY the pipeline's codegen stages
-(operators/cascade.py with_transcript_stats + with_keep_drop,
-operators/text_stage.py mask_scrub, plans/pipeline.py run_metrics) as SQL
+(operators/cascade.py ``label``: with_transcript_stats + with_keep_drop +
+mask_scrub; plans/pipeline.py run_metrics) as SQL
 text over a temp view of the fused-feature stage output, so the
 declarative path users actually write produces the same rows AND the same
 physical plan shape (one Arrow crossing, one salted exchange) as the
 DataFrame path. Parity is pinned by tests/test_sql_api.py.
 
-Only the pandas/Arrow UDF stage itself (decode + langid + scrub-mask
-generation, operators/fused_stage.py) stays a DataFrame transform — a
+Only the Arrow feature stage itself (decode + langid + perplexity +
+scrub, operators/fused_stage.py) stays a DataFrame transform — a
 JVM↔Python crossing has no SQL spelling; everything downstream of it is
 SQL here.
 

@@ -2631,13 +2631,14 @@ def audio_dropout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whole-clip quiet run) fall to ``audio_silence`` upstream. Rows-only;
     run-length exactness is pinned in tests/test_audio.py.
 
-    Spark shape: one pandas-UDF decode projection on the scan (payload dies
-    in the worker), codegen class cascade, one tiny aggregation."""
+    Spark shape: the flagship's mapInArrow feature stage on the scan
+    (payload dies in the worker), codegen class cascade, one tiny
+    aggregation."""
     from ..config import DEFAULT_CONFIG
-    from ..operators.decode import with_decode_features
+    from ..operators.fused_stage import with_fused_features
 
     t = DEFAULT_CONFIG.thresholds
-    feats = with_decode_features(load_clips(spark, sf_dir)).drop("bytes")
+    feats = with_fused_features(load_clips(spark, sf_dir))
     classed = feats.withColumn(
         "dropout_class",
         F.when(~F.col("pcm_ok"), "undecodable")

@@ -1,6 +1,7 @@
 """SparkSession factory with the pipeline's pinned configuration.
 
-Local-mode defaults sized for the sandbox (local[$SPARK_GRAFT_CPUS]); on a
+Local-mode defaults sized from the host (local[$SPARK_GRAFT_CPUS], a driver
+heap from MemAvailable unless $SPARK_GRAFT_DRIVER_MEM overrides it); on a
 real cluster the same builder options apply, only master/memory change
 (launched via ``spark-submit --py-files``).
 """
@@ -12,6 +13,38 @@ import os
 from pyspark.sql import SparkSession
 
 from .config import DEFAULT_CONFIG
+
+_HEAP_SHARE = 0.4  # of MemAvailable
+_HEAP_MIN_MB = 1024  # Spark refuses driver heaps under ~450 MB
+_HEAP_MAX_MB = 12 * 1024
+
+
+def driver_mem_for(mem_available_kb: int) -> str:
+    """Driver heap for a host with ``mem_available_kb`` of MemAvailable:
+    40% of it, between 1g and 12g. The heap is pinned and pre-touched (see
+    get_spark), and the JVM's off-heap memory (~2 GB) plus one Python worker
+    per core come on top of it — a flat 12g gets the driver OOM-killed on a
+    16 GB host."""
+    mb = int(mem_available_kb * _HEAP_SHARE) // 1024
+    return f"{min(_HEAP_MAX_MB, max(_HEAP_MIN_MB, mb))}m"
+
+
+def default_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else ``driver_mem_for`` this host
+    (12g where /proc/meminfo is unreadable)."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open("/proc/meminfo") as fh:
+            avail_kb = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration):
+        return f"{_HEAP_MAX_MB}m"
+    return driver_mem_for(avail_kb)
 
 
 def get_spark(
@@ -30,7 +63,7 @@ def get_spark(
     else:
         master = f"local[{cpus}]"
     shuffle = shuffle_partitions or DEFAULT_CONFIG.shuffle_partitions
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+    driver_mem = default_driver_mem()
     # Shuffle spill dir: tmpfs by default. On a real cluster each executor
     # shuffles to its own local NVMe (scales with nodes); in this single-VM
     # proxy the lone /tmp disk would be an artificial serial resource.
