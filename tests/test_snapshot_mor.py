@@ -134,19 +134,39 @@ def test_mor_column_drop_refused_without_reading_base(spark, table):
 
 
 def test_mor_equals_cow_for_same_waves(spark, tmp_path):
+    """Both modes resolve the same batches latest-wins, so the same
+    waves — upserts, a delete arm that hits inserted, base and absent
+    keys, and a widening wave — leave the same rows, new column
+    included."""
     base_rows = [(f"c{i:03d}", f"v0_{i}", 0) for i in range(40)]
     wave1 = [("c001", "u1", 1), ("new1", "n1", 1)]
     wave2 = [("c001", "u2", 2), ("c002", "DEAD", 2), ("new2", "n2", 2)]
+    wave3 = [("new1", "DEAD", 3), ("c004", "DEAD", 3), ("ghost", "DEAD", 3)]
+    wave4 = [("c001", "w4", 4, "x1"), ("new2", "w4", 4, None), ("new4", "n4", 4, "x4")]
     states = {}
     for mode in ("cow", "mor"):
         path = str(tmp_path / f"tbl_{mode}")
         st.create_table(spark, path, _df(spark, base_rows), key="clip_id", n_buckets=8)
         st.merge(spark, path, _df(spark, wave1), mode=mode)
+        for wave in (wave2, wave3):
+            st.merge(
+                spark, path, _df(spark, wave), delete_where="val = 'DEAD'",
+                mode=mode,
+            )
         st.merge(
-            spark, path, _df(spark, wave2), delete_where="val = 'DEAD'", mode=mode
+            spark, path, spark.createDataFrame(wave4, SCHEMA + ", note string"),
+            mode=mode,
         )
-        states[mode] = _state(spark, path)
+        states[mode] = {
+            r["clip_id"]: (r["val"], r["seq"], r["note"])
+            for r in st.read_table(spark, path).collect()
+        }
     assert states["cow"] == states["mor"]
+    state = states["cow"]
+    assert len(state) == 40 + 3 - 3
+    assert state["c001"] == ("w4", 4, "x1") and state["new4"] == ("n4", 4, "x4")
+    assert state["c003"] == ("v0_3", 0, None)
+    assert not {"c002", "c004", "new1", "ghost"} & set(state)
 
 
 def test_cdc_over_delta_chain(spark, table):
@@ -272,25 +292,6 @@ def test_cli_mor_merge_and_snapshot_compact(spark, table, tmp_path, capsys):
     assert state["c001"] == ("u1", 1) and state["zz9"] == ("new", 1)
 
 
-def test_upsert_auto_mor_dispatch(spark, table):
-    from wallaby2caom2_spark.operators.upsert import merge_upsert_auto
-
-    out = merge_upsert_auto(
-        spark, table, _df(spark, [("c001", "u1", 1)]), key="clip_id",
-        write_mode="mor",
-    )
-    assert out["engine"] == "snapshot_merge" and out["mode"] == "mor"
-    assert _state(spark, table)["c001"] == ("u1", 1)
-    # non-snapshot path refuses mor rather than silently rewriting
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mor"):
-        merge_upsert_auto(
-            spark, str(table) + "_plainXdir", _df(spark, [("a", "b", 1)]),
-            write_mode="mor",
-        )
-
-
 def test_streaming_mor_equals_cow_stream(spark, tmp_path):
     """run_upsert_stream(write_mode='mor', compact_min_deltas=2): the
     high-frequency-ingest shape — each micro-batch lands as deltas, the
@@ -397,18 +398,14 @@ def test_mor_crash_before_commit_invisible_and_orphan_reaped(
     assert _state(spark, table)["c001"] == ("lost", 2)
 
 
-def test_mor_conflict_detection(spark, table):
+def test_mor_conflict_detection(spark, table, monkeypatch):
     """Two MOR merges from the same base: second commit loses."""
-    base = st.read_manifest(table)
-    from wallaby2caom2_spark.operators.upsert import _dedup_updates  # noqa: F401
-
+    real_read = st.read_manifest
+    base = real_read(table)
     st.merge(spark, table, _df(spark, [("c001", "u1", 1)]), mode="mor")
     # replay a merge whose base manifest was captured before the commit
+    monkeypatch.setattr(
+        st, "read_manifest", lambda path, version=None: dict(base)
+    )
     with pytest.raises(st.SnapshotConflictError):
-        st._merge_mor(
-            spark,
-            table,
-            base,
-            st.with_bucket(_df(spark, [("c002", "x", 1)]), base["n_buckets"], key="clip_id"),
-            None,
-        )
+        st.merge(spark, table, _df(spark, [("c002", "x", 1)]), mode="mor")

@@ -95,6 +95,41 @@ def test_where_read_equals_filter(spark, table):
         assert got == want, pred
 
 
+def _assert_where_equals_filter(spark, path, where):
+    got = sorted(
+        r["clip_id"] for r in st.read_table(spark, path, where=where).collect()
+    )
+    want = sorted(
+        r["clip_id"] for r in st.read_table(spark, path).filter(where).collect()
+    )
+    assert got == want, where
+    return got
+
+
+@pytest.mark.parametrize("ws", ["\n", "\t", "  "], ids=["newline", "tab", "2space"])
+@pytest.mark.parametrize("tail", ["OR v = 7", "OR NOT v >= 7"], ids=["or", "or_not"])
+def test_or_not_after_any_whitespace_blocks_pruning(spark, table, ws, tail):
+    """``score = 100.0`` holds nowhere (score is i % 97), so pruning on
+    the conjuncts before the OR would drop every bucket; the rows the
+    OR branch matches must still come back."""
+    where = f"v = 5 AND score = 100.0{ws}{tail}"
+    assert st.prune_buckets(st.read_manifest(table), where) is None
+    assert _assert_where_equals_filter(spark, table, where)
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        "grp >= 'a AND grp = ''zz'''",
+        "grp >= 'a' AND grp < 'grp1 and v = 1'",
+        "grp >= \"a AND grp = 'zz'\"",
+    ],
+    ids=["phantom_conjunct", "and_in_bound", "double_quoted"],
+)
+def test_and_inside_quoted_literal_is_not_a_conjunct(spark, table, where):
+    assert _assert_where_equals_filter(spark, table, where)
+
+
 def test_reversed_literal_and_string_conjuncts_parse(spark, table):
     m = st.read_manifest(table)
     assert st.prune_buckets(m, "390 <= v") == st.prune_buckets(m, "v >= 390")

@@ -1,23 +1,13 @@
-"""Source-dispatch tests: the table-name branch of ``read_clips`` (S1) and
-the Iceberg runtime probe (exercised even though the jar is absent here —
-reference analog: the todo-file vs remote-listing source selection,
-``wallaby2caom2/composable.py:115-177``)."""
+"""Source-dispatch tests: the table-name and path branches of
+``read_clips`` (S1; reference analog: the todo-file vs remote-listing
+source selection, ``wallaby2caom2/composable.py:115-177``)."""
 
 from __future__ import annotations
 
 import pytest
 
 from wallaby2caom2_spark import datagen
-from wallaby2caom2_spark.sources.clips import (
-    CLIPS_SCHEMA,
-    iceberg_available,
-    read_clips,
-)
-
-
-def test_iceberg_probe_is_false_here(spark):
-    # no Iceberg jar in this container — the probe must degrade, not raise
-    assert iceberg_available(spark) is False
+from wallaby2caom2_spark.sources.clips import CLIPS_SCHEMA, read_clips
 
 
 def test_read_clips_table_branch(spark, tmp_path):

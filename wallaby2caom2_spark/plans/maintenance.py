@@ -71,7 +71,7 @@ def compact_results_job(
 ) -> dict:
     """Small-files compaction over the bucket-partitioned results table —
     the Iceberg ``rewrite_data_files`` analog. Incremental writers (the
-    wave runner, streaming foreachBatch, repeated upserts) each leave a
+    wave runner, streaming foreachBatch) each leave a
     few files per partition; after enough runs a 10^12-row table reads
     thousands of kilobyte files per bucket and scan planning dominates.
 
@@ -115,8 +115,8 @@ def compact_results_job(
     )
     for b in to_compact:
         sub = spark.read.parquet(results_path).filter(F.col("bucket") == b)
-        # break lineage to the files the overwrite below replaces — same
-        # read-own-input hazard merge_upsert documents
+        # break lineage to the files the overwrite below replaces: the
+        # plan would otherwise read the partition it is overwriting
         sub = sub.repartition(targets[b]).localCheckpoint(eager=True)
         (
             sub.write.mode("overwrite")

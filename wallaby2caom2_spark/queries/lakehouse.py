@@ -38,7 +38,7 @@ from ..sources import snapshot_table as st
 from ._tables import load
 from .clips_flagship import _CACHE_ROOT
 
-_TBL_VERSION = "v3"  # bump forces cache rebuild (v3 adds zone-map stats)
+_TBL_VERSION = "v4"  # bump forces cache rebuild (v4: one latest-wins resolution)
 _N_BUCKETS = 8
 
 
@@ -221,7 +221,7 @@ ORDER BY rec_id
 """
 
 
-_MOR_TBL_VERSION = "v2"  # v2: manifests carry zone-map stats
+_MOR_TBL_VERSION = "v3"  # v3: rebuilt with the shared latest-wins resolution
 
 
 def _mor_table_path(sf_dir: str) -> str:

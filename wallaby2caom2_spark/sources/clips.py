@@ -32,25 +32,11 @@ CLIPS_SCHEMA = T.StructType(
 )
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """Probe for the Iceberg Spark runtime (absent in this container).
-
-    Must actually load the class: bare ``spark._jvm.org...`` attribute
-    access returns a lazy py4j JavaPackage and never raises."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def _is_schemaless_read(e) -> bool:
     """True only for the 'no parquet footers to infer a schema from' /
     'path does not exist' family — the one read failure that means
     "nothing was written yet", not "the read broke". Shared by every sink
-    that bootstraps or tolerates an empty table (runner, export, upsert)."""
+    that bootstraps or tolerates an empty table (runner, export)."""
     get = getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
     cond = (get() if get else None) or ""
     return cond.startswith(("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")) or (
@@ -60,8 +46,8 @@ def _is_schemaless_read(e) -> bool:
 
 def read_clips(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan with the pinned schema → Catalyst gets pushdown +
-    pruning for free; an Iceberg table name (``catalog.db.clips``) is read
-    via ``spark.read.table`` when the runtime is present.
+    pruning for free; a catalog table name (``catalog.db.clips``) is read
+    via ``spark.read.table``.
 
     A table NAME is dot-separated identifiers only — anything with a path
     separator, a URI scheme (``s3a://…/clips.parquet``, ``data/x.parquet``)

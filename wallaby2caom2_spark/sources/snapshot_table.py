@@ -59,7 +59,9 @@ end-to-end in tests with no mocks:
   delta count crossed a threshold — incremental maintenance). This is
   the Iceberg v2 positional/equality-delete // Delta deletion-vector
   trade: COW pays at write time and reads clean files, MOR pays a
-  per-read window over delta'd buckets and writes O(batch).
+  per-read window over delta'd buckets and writes O(batch). Both modes
+  build the same batch and resolve it with the same latest-wins window
+  (``_resolve_deltas``); they differ only in when it runs.
 - **Time travel** — ``read_table(..., version=N)`` resolves any retained
   manifest.
 
@@ -82,6 +84,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ..operators.partitioning import with_bucket
 
@@ -286,29 +289,64 @@ def _merge_stats_union(base: dict | None, delta: dict | None) -> dict:
     }
 
 
-_CONJUNCT_RE = re.compile(
-    r"^\s*(\w+)\s*(<=|>=|<|>|=)\s*(.+?)\s*$"
-)
-_REV_CONJUNCT_RE = re.compile(
-    r"^\s*('(?:[^']|'')*'|-?\d+(?:\.\d+)?)\s*(<=|>=|<|>|=)\s*(\w+)\s*$"
-)
+# string literals and backquoted names, matched left to right, so that a
+# keyword, operator or quote inside one is never read as predicate syntax
+_QUOTED_RE = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`")
+# one side of a conjunct: a name, a hidden quoted token, or a number
+_TERM = r"(\x00\d+\x00|-?\d+(?:\.\d+)?|\w+)"
+_CONJUNCT_RE = re.compile(rf"\s*{_TERM}\s*(<=|>=|<|>|=)\s*{_TERM}\s*")
+_NUMBER_RE = re.compile(r"-?\d+(?:\.\d+)?")
 _FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
 
 
-def _parse_literal(tok: str):
-    tok = tok.strip()
-    if len(tok) >= 2 and tok[0] == "'" and tok[-1] == "'":
-        return tok[1:-1].replace("''", "'")
-    if tok.lower() in ("true", "false"):
-        return tok.lower() == "true"
-    try:
-        return int(tok)
-    except ValueError:
-        pass
-    try:
-        return float(tok)
-    except ValueError:
+def _term(term: str, hidden: list[str]) -> tuple[str, object] | None:
+    """One side of a conjunct as ``("col", name)`` or ``("lit", value)``;
+    None for anything else (a double-quoted or backquoted token — either
+    can name a column — or a typed literal such as ``5L``)."""
+    if term.startswith("\x00"):
+        tok = hidden[int(term.strip("\x00"))]
+        if tok.startswith("'"):
+            return "lit", tok[1:-1].replace("''", "'")
         return None
+    if _NUMBER_RE.fullmatch(term):
+        return "lit", float(term) if "." in term else int(term)
+    if term.lower() in ("true", "false"):
+        return "lit", term.lower() == "true"
+    return None if term[0].isdigit() else ("col", term)
+
+
+def _conjuncts(where: str) -> list[tuple] | None:
+    """``where`` as a list of ``(column, op, literal)`` when it is a
+    top-level AND chain of such comparisons and nothing else; None for
+    any other shape. All or nothing: a part that does not parse could be
+    a fragment of CASE, BETWEEN or a comment, so pruning on the parts
+    that did parse would not be safe. Backslash escapes are not parsed."""
+    if "\\" in where or "\x00" in where:
+        return None
+    hidden: list[str] = []
+
+    def hide(m):
+        hidden.append(m.group(0))
+        return f"\x00{len(hidden) - 1}\x00"
+
+    masked = _QUOTED_RE.sub(hide, where)
+    if re.search(r"(?i)\b(or|not)\b|[()]", masked):
+        return None
+    out = []
+    for part in re.split(r"(?i)\band\b", masked):
+        m = _CONJUNCT_RE.fullmatch(part)
+        if not m:
+            return None
+        left, op, right = m.groups()
+        lt, rt = _term(left, hidden), _term(right, hidden)
+        kinds = (lt and lt[0], rt and rt[0])
+        if kinds == ("col", "lit"):
+            out.append((left, op, rt[1]))
+        elif kinds == ("lit", "col"):
+            out.append((right, _FLIP[op], lt[1]))
+        else:
+            return None
+    return out
 
 
 def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
@@ -338,33 +376,14 @@ def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
 def prune_buckets(manifest: dict, where: str) -> list[int] | None:
     """Buckets that MAY hold rows matching ``where``, from the
     manifest's zone maps — or None when pruning cannot be proven safe
-    (disjunctions/parentheses/unparseable conjuncts on every column, or
-    a pre-stats manifest). Conservative by construction: only
-    top-level AND chains of ``col (<|<=|>|>=|=) literal`` conjuncts
-    participate; anything else keeps the bucket. The returned list
+    (any shape other than a top-level AND chain of ``col (<|<=|>|>=|=)
+    literal`` comparisons, or a pre-stats manifest). The returned list
     feeds ``_read_buckets`` — the same code path as explicit bucket
     selection, so pruned reads stay on the ordinary scan plan."""
     stats: dict = manifest.get("stats") or {}
     if not stats:
         return None
-    low = where.lower()
-    if "(" in where or ")" in where or " or " in f" {low} " or " not " in f" {low} ":
-        return None
-    conjuncts = []
-    for part in re.split(r"(?i)\s+and\s+", where.strip()):
-        # reversed form first: "390 <= v" would otherwise match the
-        # normal regex with "390" as the column name
-        m = _REV_CONJUNCT_RE.match(part)
-        if m:
-            lit = _parse_literal(m.group(1))
-            if lit is not None:
-                conjuncts.append((m.group(3), _FLIP[m.group(2)], lit))
-                continue
-        m = _CONJUNCT_RE.match(part)
-        if m and not m.group(1).isdigit():
-            lit = _parse_literal(m.group(3))
-            if lit is not None:
-                conjuncts.append((m.group(1), m.group(2), lit))
+    conjuncts = _conjuncts(where)
     if not conjuncts:
         return None
     all_buckets = set(manifest["buckets"]) | set(manifest.get("deltas", {}))
@@ -410,20 +429,56 @@ def create_table(
     n_buckets: int = 16,
 ) -> dict:
     """Bootstrap version 0 from ``df``. Fails if a table already exists
-    (use merge for subsequent writes)."""
+    (use merge for subsequent writes). Duplicate keys in ``df`` collapse
+    to one row each, by the rule ``merge`` applies without ``order_col``."""
     if is_snapshot_table(path):
         raise ValueError(f"snapshot table already exists at {path}")
-    bucketed = with_bucket(df, n_buckets, key=key)
-    _sid, dirs, stats = _write_snapshot_files(bucketed, path, n_buckets)
-    manifest = {
-        "key": key,
-        "n_buckets": n_buckets,
-        "buckets": {str(b): d for b, d in dirs.items()},
-        "schema": _schema_with_bucket(bucketed),
-        "stats": stats,
-    }
-    _commit(path, manifest, new_version=0, base_version=-1)
+    bucketed = with_bucket(_dedup_updates(df, key, None), n_buckets, key=key)
+    empty = {"key": key, "n_buckets": n_buckets, "version": -1}
+    _commit_rewrite(path, empty, bucketed, None, _schema_with_bucket(bucketed))
     return read_manifest(path)
+
+
+def _commit_rewrite(
+    path: str,
+    base: dict,
+    df: DataFrame,
+    rewritten: list[int] | None,
+    schema: str,
+) -> tuple[int, dict[int, str]]:
+    """Commit ``df`` (carrying ``bucket``) as the new content of the
+    ``rewritten`` buckets — of the whole table when None — on top of
+    ``base``: write a fresh snapshot, drop those buckets' base entries,
+    pending delta lists and zone maps, add the written bucket dirs with
+    their exact zone maps, and link manifest ``v<base + 1>``. Every other
+    bucket carries forward untouched; a rewritten bucket left empty (its
+    rows all deleted) drops out of the manifest. Returns the new version
+    and the {bucket: dir} written."""
+    n_tasks = base["n_buckets"] if rewritten is None else len(rewritten)
+    _sid, dirs, stats = _write_snapshot_files(df, path, n_tasks)
+    gone = None if rewritten is None else {str(b) for b in rewritten}
+
+    def carried(entries: dict | None) -> dict:
+        if gone is None:
+            return {}
+        return {b: v for b, v in (entries or {}).items() if b not in gone}
+
+    manifest = {
+        "key": base["key"],
+        "n_buckets": base["n_buckets"],
+        "buckets": {
+            **carried(base.get("buckets")),
+            **{str(b): d for b, d in dirs.items()},
+        },
+        "schema": schema,
+        "stats": {**carried(base.get("stats")), **stats},
+    }
+    deltas = carried(base.get("deltas"))
+    if deltas:
+        manifest["deltas"] = deltas
+    version = base["version"] + 1
+    _commit(path, manifest, version, base_version=base["version"])
+    return version, dirs
 
 
 def _union_snap_reads(
@@ -450,14 +505,15 @@ def _union_snap_reads(
 def _resolve_deltas(
     base: DataFrame | None, delta: DataFrame, key: str
 ) -> DataFrame:
-    """Merge-on-read resolution: latest ``_seq`` wins per key, tombstones
+    """Latest-wins resolution, shared by merge-on-read reads and the
+    copy-on-write merge: latest ``_seq`` wins per key, tombstones
     (``_deleted``) drop the key. ``base`` rows carry ``_seq = -1``; each
     delta group already has unique keys (``_dedup_updates`` ran at write
     time), so (key, _seq) is unique and the window is a top-1 per key.
-    The shuffle this costs is confined to the delta'd buckets — the
-    documented MOR read tax."""
-    from pyspark.sql.window import Window
-
+    The result keeps ``_in_base`` (the key held a base row), the one fact
+    COW's updated/inserted/deleted counts need; a read drops it and the
+    optimizer prunes its window function. The shuffle this costs is
+    confined to the delta'd buckets — the documented MOR read tax."""
     if base is not None:
         base = base.withColumn("_seq", F.lit(-1)).withColumn(
             "_deleted", F.lit(False)
@@ -465,9 +521,12 @@ def _resolve_deltas(
         merged = base.unionByName(delta, allowMissingColumns=True)
     else:
         merged = delta
-    w = Window.partitionBy(key).orderBy(F.col("_seq").desc())
+    by_key = Window.partitionBy(key)
     return (
-        merged.withColumn("_rn", F.row_number().over(w))
+        merged.withColumn(
+            "_rn", F.row_number().over(by_key.orderBy(F.col("_seq").desc()))
+        )
+        .withColumn("_in_base", F.min("_seq").over(by_key) < 0)
         .filter((F.col("_rn") == 1) & ~F.coalesce("_deleted", F.lit(False)))
         .drop("_rn", "_seq", "_deleted")
     )
@@ -522,7 +581,9 @@ def _read_buckets(
                 if delta_df is None
                 else delta_df.unionByName(d, allowMissingColumns=True)
             )
-        resolved = _resolve_deltas(base, delta_df, manifest["key"])
+        resolved = _resolve_deltas(base, delta_df, manifest["key"]).drop(
+            "_in_base"
+        )
 
     if clean is None and resolved is None:
         return _empty_frame(spark, manifest)
@@ -585,14 +646,6 @@ def read_table_by_keys(
     return df.filter(F.col(key).isin(list(keys)))
 
 
-def _manifest_columns(manifest: dict) -> set[str]:
-    """Data columns the table currently holds (from the recorded schema),
-    excluding the partition column — the no-read column-drop check MOR
-    needs (a COW merge learns them from the bucket read instead)."""
-    fields = json.loads(manifest["schema"])["fields"]
-    return {f["name"] for f in fields} - {"bucket"}
-
-
 def _widened_schema_json(manifest: dict, upd: DataFrame) -> str:
     """The read schema after a widening merge: every existing field in
     its recorded order, then any NEW update columns, bucket last."""
@@ -604,6 +657,31 @@ def _widened_schema_json(manifest: dict, upd: DataFrame) -> str:
             fields.append(T.StructField(f.name, f.dataType, True))
     fields.append(T.StructField("bucket", T.IntegerType(), True))
     return json.dumps(T.StructType(fields).jsonValue())
+
+
+def _dedup_updates(
+    updates: DataFrame, key: str, order_col: str | None
+) -> DataFrame:
+    """Collapse intra-batch duplicate keys deterministically: highest
+    ``order_col`` wins, and a content hash breaks residual ties (and
+    decides alone without ``order_col``), so a re-run keeps the same
+    row. Map columns stay out of the hash — xxhash64 rejects MapType at
+    analysis time, and the hash only orders rows already equal on
+    ``order_col``, which any non-map column difference still separates."""
+    hashable = [
+        f.name
+        for f in updates.schema.fields
+        if not isinstance(f.dataType, T.MapType)
+    ]
+    order = (
+        [F.col(order_col).desc_nulls_last()] if order_col else []
+    ) + [F.xxhash64(*[F.col(c) for c in hashable]).desc()]
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        updates.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def merge(
@@ -634,15 +712,18 @@ def merge(
     A NULL ``delete_where`` result counts as false (keep). A bucket
     emptied by deletes drops out of the manifest (sparse manifests).
 
-    Schema evolution: updates may carry NEW columns (widening) — the
-    touched buckets are rewritten with the superset schema, untouched
-    buckets keep their files and read back with NULL for the new columns
-    (``_read_buckets``). Updates may NOT drop existing columns: a missing
-    column would silently NULL matched rows' retained values, so it
-    raises instead.
+    Both modes build the same batch — deduped, bucketed, the delete arm
+    folded into a ``_deleted`` tombstone flag — and resolve it with the
+    same latest-wins rule (``_resolve_deltas``): COW at write time,
+    against the touched buckets; MOR at read time.
 
-    ``mode="mor"`` (merge-on-read) writes ONLY the deduped batch —
-    tombstone rows (``_deleted``) for the delete arm — as per-bucket
+    Schema evolution: updates may carry NEW columns (widening) — the
+    manifest records the superset schema, and rows written before it
+    read back NULL for the new columns (``_read_buckets``). Updates may
+    NOT lack a column the manifest records: it would silently NULL
+    matched rows' retained values, so it raises instead.
+
+    ``mode="mor"`` (merge-on-read) writes ONLY the batch as per-bucket
     delta file groups appended to the manifest's delta lists: O(batch)
     I/O with no base read, the write path for frequent small batches at
     10^12-row scale. Resolution happens at read time
@@ -655,24 +736,49 @@ def merge(
     "inserted", "deleted"} for COW; {"version", "base_version",
     "touched_buckets", "delta_rows", "mode"} for MOR.
     """
-    from ..operators.upsert import _dedup_updates
-
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
     base = read_manifest(path)
-    key, n_buckets = base["key"], base["n_buckets"]
-
-    upd = with_bucket(
-        _dedup_updates(updates, key, order_col), n_buckets, key=key
+    key = base["key"]
+    batch = with_bucket(
+        _dedup_updates(updates, key, order_col), base["n_buckets"], key=key
     )
+    recorded = {f["name"] for f in json.loads(base["schema"])["fields"]}
+    dropped = recorded - {"bucket"} - set(batch.columns)
+    if dropped:
+        raise ValueError(
+            f"updates are missing existing columns {sorted(dropped)}: "
+            "column drops are not supported (a latest-wins merge would "
+            "silently NULL matched rows' retained values) — carry every "
+            "existing column; new columns (widening) are fine"
+        )
+    is_del = (
+        F.lit(False)
+        if delete_where is None
+        else F.coalesce(F.expr(delete_where).cast("boolean"), F.lit(False))
+    )
+    # one materialization: the batch feeds the write or the resolve, and
+    # the counts
+    batch = batch.withColumn("_deleted", is_del).localCheckpoint(eager=True)
+    schema = _widened_schema_json(base, batch)
     if mode == "mor":
-        return _merge_mor(spark, path, base, upd, delete_where)
-    # one materialization: the deduped batch feeds the touched-bucket
-    # collect, the resolve, and the counts (upsert.py's contract)
-    upd = upd.localCheckpoint(eager=True)
-    touched = sorted(
-        int(r["bucket"]) for r in upd.select("bucket").distinct().collect()
+        return _merge_mor(path, base, batch, schema)
+    return _merge_cow(spark, path, base, batch, schema)
+
+
+def _merge_cow(
+    spark: SparkSession, path: str, base: dict, batch: DataFrame, schema: str
+) -> dict:
+    """The copy-on-write arm: the batch is resolved against the touched
+    buckets as the next delta of each, now instead of at read time, and
+    the result rewrites those buckets. Rewriting a bucket with pending
+    MOR deltas materializes them (the bucket read resolves them)."""
+    rows = (
+        batch.groupBy("bucket")
+        .agg(F.sum((~F.col("_deleted")).cast("long")).alias("live"))
+        .collect()
     )
+    touched = sorted(int(r["bucket"]) for r in rows)
     if not touched:
         return {
             "version": base["version"],
@@ -682,119 +788,37 @@ def merge(
             "inserted": 0,
             "deleted": 0,
         }
-
     existing = _read_buckets(spark, path, base, touched)
-    dropped = (set(existing.columns) - {"bucket"}) - set(upd.columns)
-    if dropped:
-        raise ValueError(
-            f"updates are missing existing columns {sorted(dropped)}: "
-            "column drops are not supported (a latest-wins merge would "
-            "silently NULL matched rows' retained values) — carry every "
-            "existing column; new columns (widening) are fine"
-        )
-    if delete_where is not None:
-        is_del = F.coalesce(F.expr(delete_where).cast("boolean"), F.lit(False))
-        del_keys = upd.filter(is_del).select(key).distinct()
-        n_deleted = existing.join(del_keys, on=key, how="left_semi").count()
-        existing = existing.join(del_keys, on=key, how="left_anti")
-        upd = upd.filter(~is_del)
-    else:
-        n_deleted = 0
-    n_before = existing.count()
-    from pyspark.sql.window import Window
-
-    merged = existing.withColumn("_is_update", F.lit(False)).unionByName(
-        upd.withColumn("_is_update", F.lit(True)),
-        allowMissingColumns=True,  # widening: existing side gains NULLs
+    n_existing = existing.count()
+    resolved = _resolve_deltas(
+        existing, batch.withColumn("_seq", F.lit(base["version"] + 1)),
+        base["key"],
+    ).localCheckpoint(eager=True)
+    n_after, n_kept = resolved.agg(
+        F.count(F.lit(1)), F.sum(F.col("_in_base").cast("long"))
+    ).first()
+    n_kept = n_kept or 0
+    inserted = n_after - n_kept
+    version, _dirs = _commit_rewrite(
+        path, base, resolved.drop("_in_base"), touched, schema
     )
-    w = Window.partitionBy(key).orderBy(F.col("_is_update").desc())
-    resolved = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_update")
-    )
-    # new files never overwrite old ones (fresh snapshot dir), so no
-    # lineage break is needed — the base snapshot stays readable
-    # throughout; counts still want one materialization
-    resolved = resolved.localCheckpoint(eager=True)
-    n_after = resolved.count()
-    n_update_keys = upd.count()
-    inserted = n_after - n_before
-
-    _sid, new_dirs, new_stats = _write_snapshot_files(
-        resolved, path, len(touched)
-    )
-    new_buckets = dict(base["buckets"])  # untouched entries carry forward
-    for b in touched:  # a touched bucket emptied by deletes has no new dir
-        new_buckets.pop(str(b), None)
-    new_buckets.update({str(b): d for b, d in new_dirs.items()})
-    # a COW rewrite of a delta'd bucket MATERIALIZES its pending deltas
-    # (the bucket read above resolved them), so their list entries clear
-    new_deltas = {
-        b: lst
-        for b, lst in base.get("deltas", {}).items()
-        if int(b) not in set(touched)
-    }
-    # rewritten buckets get EXACT fresh zone maps; untouched carry forward
-    stats = {
-        b: s
-        for b, s in (base.get("stats") or {}).items()
-        if int(b) not in set(touched)
-    }
-    stats.update(new_stats)
-    manifest = {
-        "key": key,
-        "n_buckets": n_buckets,
-        "buckets": new_buckets,
-        "schema": _schema_with_bucket(resolved),
-        "stats": stats,
-    }
-    if new_deltas:
-        manifest["deltas"] = new_deltas
-    new_version = base["version"] + 1
-    _commit(path, manifest, new_version, base_version=base["version"])
     return {
-        "version": new_version,
+        "version": version,
         "base_version": base["version"],
         "touched_buckets": touched,
-        "updated": n_update_keys - inserted,
+        "updated": sum(r["live"] for r in rows) - inserted,
         "inserted": inserted,
-        "deleted": n_deleted,
+        "deleted": n_existing - n_kept,
     }
 
 
-def _merge_mor(
-    spark: SparkSession,
-    path: str,
-    base: dict,
-    upd: DataFrame,
-    delete_where: str | None,
-) -> dict:
-    """The merge-on-read write path: write the deduped batch (with the
-    delete arm folded into a ``_deleted`` tombstone flag) as per-bucket
-    delta file groups and append them to the manifest's delta lists —
-    no base read, no bucket rewrite, O(batch) I/O end-to-end.
-
-    A tombstone for a key the table never held resolves to nothing at
-    read time — the same unmatched-delete-is-a-no-op rule as the COW
-    arm. The column-drop check runs against the manifest's RECORDED
-    schema (no read needed); widening columns extend it."""
-    key = base["key"]
-    dropped = _manifest_columns(base) - set(upd.columns)
-    if dropped:
-        raise ValueError(
-            f"updates are missing existing columns {sorted(dropped)}: "
-            "column drops are not supported (a latest-wins merge would "
-            "silently NULL matched rows' retained values) — carry every "
-            "existing column; new columns (widening) are fine"
-        )
-    if delete_where is not None:
-        is_del = F.coalesce(F.expr(delete_where).cast("boolean"), F.lit(False))
-    else:
-        is_del = F.lit(False)
-    upd = upd.withColumn("_deleted", is_del)
-    upd = upd.localCheckpoint(eager=True)  # one materialization: write + count
-    n_rows = upd.count()
+def _merge_mor(path: str, base: dict, batch: DataFrame, schema: str) -> dict:
+    """The merge-on-read arm: write the batch as per-bucket delta file
+    groups and append them to the manifest's delta lists — no base read,
+    no bucket rewrite, O(batch) I/O end-to-end. A tombstone for a key
+    the table never held resolves to nothing at read time — the same
+    unmatched-delete-is-a-no-op rule as the COW arm."""
+    n_rows = batch.count()
     if n_rows == 0:
         return {
             "version": base["version"],
@@ -805,7 +829,7 @@ def _merge_mor(
         }
     new_version = base["version"] + 1
     _sid, new_dirs, delta_stats = _write_snapshot_files(
-        upd, path, base["n_buckets"]
+        batch, path, base["n_buckets"]
     )
     deltas = {b: list(lst) for b, lst in base.get("deltas", {}).items()}
     for b, rel in new_dirs.items():
@@ -825,11 +849,11 @@ def _merge_mor(
             stats[b] = s  # no base rows: the delta IS the bucket
         # else: pre-stats base bucket — leave unstated (never prunable)
     manifest = {
-        "key": key,
+        "key": base["key"],
         "n_buckets": base["n_buckets"],
         "buckets": dict(base["buckets"]),
         "deltas": deltas,
-        "schema": _widened_schema_json(base, upd),
+        "schema": schema,
         "stats": stats,
     }
     _commit(path, manifest, new_version, base_version=base["version"])
@@ -865,6 +889,13 @@ def compact(
     scales with the fragmented fraction, not the table."""
     base = read_manifest(path)
     base_deltas: dict[str, list] = base.get("deltas", {})
+    out = {
+        "version": base["version"],
+        "rewritten_buckets": [],
+        "snapshot_dirs_before": len(
+            {os.path.dirname(r) for r in base["buckets"].values()}
+        ),
+    }
     if min_deltas is None:
         targets = sorted(
             int(b) for b in set(base["buckets"]) | set(base_deltas)
@@ -874,13 +905,7 @@ def compact(
             int(b) for b, lst in base_deltas.items() if len(lst) >= min_deltas
         )
         if not targets:
-            return {
-                "version": base["version"],
-                "rewritten_buckets": [],
-                "snapshot_dirs_before": len(
-                    {os.path.dirname(r) for r in base["buckets"].values()}
-                ),
-            }
+            return out
     df = _read_buckets(spark, path, base, targets or None)
     # materialize before writing: compaction writes to a FRESH snapshot
     # dir so the scan's source files are never overwritten, but the
@@ -888,43 +913,11 @@ def compact(
     # merge commits mid-compact (the commit race is then decided by the
     # put-if-absent protocol, not by a torn scan)
     df = df.localCheckpoint(eager=True)
-    _sid, dirs, new_stats = _write_snapshot_files(
-        df, path, max(len(targets), 1)
+    # compaction restores exact zone maps for the rewritten buckets
+    version, _dirs = _commit_rewrite(
+        path, base, df, targets, base.get("schema") or _schema_with_bucket(df)
     )
-    target_set = set(targets)
-    new_buckets = {
-        b: rel
-        for b, rel in base["buckets"].items()
-        if int(b) not in target_set
-    }
-    new_buckets.update({str(b): d for b, d in dirs.items()})
-    new_deltas = {
-        b: lst for b, lst in base_deltas.items() if int(b) not in target_set
-    }
-    stats = {
-        b: s
-        for b, s in (base.get("stats") or {}).items()
-        if int(b) not in target_set
-    }
-    stats.update(new_stats)  # compaction restores exact zone maps
-    manifest = {
-        "key": base["key"],
-        "n_buckets": base["n_buckets"],
-        "buckets": new_buckets,
-        "schema": base.get("schema") or _schema_with_bucket(df),
-        "stats": stats,
-    }
-    if new_deltas:
-        manifest["deltas"] = new_deltas
-    new_version = base["version"] + 1
-    _commit(path, manifest, new_version, base_version=base["version"])
-    return {
-        "version": new_version,
-        "rewritten_buckets": targets,
-        "snapshot_dirs_before": len(
-            {os.path.dirname(r) for r in base["buckets"].values()}
-        ),
-    }
+    return {**out, "version": version, "rewritten_buckets": targets}
 
 
 def rebucket(spark: SparkSession, path: str, new_n_buckets: int) -> dict:
@@ -955,18 +948,15 @@ def rebucket(spark: SparkSession, path: str, new_n_buckets: int) -> dict:
     df = _read_buckets(spark, path, base, None).drop("bucket")
     df = with_bucket(df, new_n_buckets, key=base["key"])
     df = df.localCheckpoint(eager=True)  # pin the read to the base version
-    _sid, dirs, stats = _write_snapshot_files(df, path, new_n_buckets)
-    manifest = {
-        "key": base["key"],
-        "n_buckets": new_n_buckets,
-        "buckets": {str(b): d for b, d in dirs.items()},
-        "schema": base.get("schema") or _schema_with_bucket(df),
-        "stats": stats,
-    }
-    new_version = base["version"] + 1
-    _commit(path, manifest, new_version, base_version=base["version"])
+    version, dirs = _commit_rewrite(
+        path,
+        {**base, "n_buckets": new_n_buckets},
+        df,
+        None,
+        base.get("schema") or _schema_with_bucket(df),
+    )
     return {
-        "version": new_version,
+        "version": version,
         "n_buckets_before": base["n_buckets"],
         "n_buckets": new_n_buckets,
         "buckets_written": sorted(dirs),
