@@ -93,7 +93,7 @@ def test_lineage_covers_all_buckets(spark, clips_path, tmp_path):
 
 def test_crash_after_sinks_does_not_double_count(spark, clips_path, tmp_path):
     """A crash AFTER lineage/metrics are written but BEFORE the checkpoint
-    commit re-runs that wave on resume; the (run_id, wave)-partitioned
+    commit re-runs that wave on resume; the (run_id, bucket)-partitioned
     dynamic overwrite must replace — not append — the wave's rows, so
     summed metrics stay exact."""
     out = str(tmp_path / "out_dc")
@@ -144,6 +144,37 @@ def test_partially_empty_wave_backfills_zero_lineage(spark, tmp_path):
     assert set(rows) == set(range(64))  # EVERY committed bucket has a row
     assert sum(rows.values()) == 3
     assert 0 in set(rows.values())  # the empty buckets carry explicit zeros
+
+
+def test_sink_schemas_and_per_bucket_totals(spark, tmp_path):
+    """Pins what consumers read back from the two sinks: the column types
+    (``wave`` stays int, ``run_id`` string, ``bucket`` int) and, per
+    bucket, metrics clips summing to the lineage count — across a wave in
+    which some buckets produced rows and others none."""
+    inp = str(tmp_path / "sparse_in")
+    # 3 clips over two 4-bucket waves: at least one wave mixes buckets
+    # with rows and buckets without
+    datagen.write_clips_parquet(inp, 3, seed=5, rows_per_file=3)
+    out = str(tmp_path / "sparse_out")
+    run_resumable(spark, inp, out, n_buckets=8, n_waves=2)
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert dict(lineage.dtypes) == {
+        "run_id": "string", "wave": "int", "bucket": "int",
+        "status": "string", "clips": "bigint", "ts": "double",
+    }
+    assert dict(metrics.dtypes) == {
+        "outcome": "string", "clips": "bigint", "scrub_edits": "bigint",
+        "kept": "boolean", "wave": "int", "run_id": "string", "bucket": "int",
+    }
+    lin = {(r["wave"], r["bucket"]): r["clips"] for r in lineage.collect()}
+    assert sorted(b for _, b in lin) == list(range(8))
+    per_bucket = {
+        r["bucket"]: r["n"]
+        for r in metrics.groupBy("bucket").agg(F.sum("clips").alias("n")).collect()
+    }
+    assert {b: n for (_, b), n in lin.items() if n} == per_bucket
+    assert sum(lin.values()) == 3
 
 
 def test_empty_input_commits_zero_count_lineage(spark, tmp_path):

@@ -37,6 +37,7 @@ from ..operators import cascade
 from ..operators.features import feature_frames
 from ..operators.fused_stage import with_fused_features_retaining
 from ..operators.partitioning import with_bucket
+from ..session import local_frame
 from ..sources.clips import read_clips
 
 # the per-bucket manifest collect is the export's only driver round-trip;
@@ -160,7 +161,7 @@ def _read_shards_or_empty(
     except AnalysisException as e:
         if not _is_schemaless_read(e):
             raise
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
 
 
 def write_manifest_atomic(out_path: str, manifest: dict) -> None:

@@ -8,7 +8,13 @@ deterministic clip_id hash bucket; each *wave* (a group of buckets) is one
 bounded Spark job, committed atomically:
 
     write results (dynamic partition overwrite, per-bucket dirs)
-    → append lineage + metrics → mark buckets done in the checkpoint.
+    → read them back once: collect run_metrics per (bucket, outcome)
+    → append lineage (per-bucket sums of those rows' clips, zero-filled)
+      + metrics (the same rows) → mark buckets done in the checkpoint.
+
+The bookkeeping tables are built from the collected rows on the driver
+(``session.local_frame``), so the only Spark jobs after the results
+write are the one read-back aggregation and the two small sink writes.
 
 A crash between any two steps re-runs at most one wave; the overwrite makes
 that idempotent — exactly-once per clip at read time (tests/test_resume.py
@@ -96,15 +102,13 @@ def run_resumable(
         clips_src.write_results(result, results_path, partition_by="bucket")
 
         try:
-            written = spark.read.parquet(results_path).filter(
-                F.col("bucket").isin(bucket_group)
+            metrics = run_metrics(
+                spark.read.parquet(results_path).filter(
+                    F.col("bucket").isin(bucket_group)
+                ),
+                extra_keys=("bucket",),
             )
-            counts = [
-                (int(r["bucket"]), int(r["n"]))
-                for r in written.groupBy("bucket")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            ]
+            metric_rows = metrics.collect()
         except AnalysisException as e:
             # an all-empty first wave writes no parquet footers at all, so
             # the read-back cannot infer a schema — commit the (empty)
@@ -114,24 +118,27 @@ def run_resumable(
             # buckets with silently-zero lineage and a metrics gap.
             if not _is_schemaless_read(e):
                 raise
-            written, counts = None, []
+            metric_rows = []
         # every committed bucket gets a lineage row: in a partially-empty
-        # wave the groupBy sees only buckets that produced rows, so the
-        # empty ones are back-filled with an explicit 0 — the same row the
-        # all-empty (schemaless read) case writes, keeping lineage bucket
-        # coverage identical across the two paths
-        have = {b for b, _ in counts}
-        counts.extend((b, 0) for b in bucket_group if b not in have)
+        # wave the aggregation sees only buckets that produced rows, so the
+        # empty ones keep an explicit 0 — the same row the all-empty
+        # (schemaless read) case writes, keeping lineage bucket coverage
+        # identical across the two paths
+        counts = dict.fromkeys(bucket_group, 0)
+        for r in metric_rows:
+            counts[r["bucket"]] += r["clips"]
         lineage_src.append_lineage(
             spark,
             os.path.join(out_dir, "lineage"),
             run_id,
             wave_i,
-            counts,
+            list(counts.items()),
         )
-        if written is not None:
+        if metric_rows:
             lineage_src.append_metrics(
-                run_metrics(written, extra_keys=("bucket",)),
+                spark,
+                metric_rows,
+                metrics.schema,
                 os.path.join(out_dir, "metrics"),
                 run_id,
                 wave_i,

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
 from ._tables import load
 
 DIM = 64
@@ -856,8 +857,8 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d in range(DIM)
     ]
-    return spark.createDataFrame(
-        rows, "dim int, loading double, lam double, var_share double"
+    return local_frame(
+        spark, rows, "dim int, loading double, lam double, var_share double"
     ).orderBy("dim")
 
 

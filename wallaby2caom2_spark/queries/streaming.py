@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..streaming.windows import windowed_rollup
 
 _SINK_NAME = "stream_hourly_rollup_sink"
@@ -127,7 +128,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
     # materialized before the work dir is removed; re-wrapped so the
     # driver's collect() after return still works
-    return spark.createDataFrame(rows, "status string, n_clips bigint")
+    return local_frame(spark, rows, "status string, n_clips bigint")
 
 
 def ingest_dedup_oracle(sf_dir: str) -> str:
@@ -213,8 +214,10 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
     # materialized before the work dir is removed; re-wrapped so the
     # driver's collect() after return still works
-    return spark.createDataFrame(
-        rows, "outcome string, n_clips bigint, scrub_edits bigint, avg_ppl double"
+    return local_frame(
+        spark,
+        rows,
+        "outcome string, n_clips bigint, scrub_edits bigint, avg_ppl double",
     )
 
 

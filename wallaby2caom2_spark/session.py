@@ -9,8 +9,12 @@ real cluster the same builder options apply, only master/memory change
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .config import DEFAULT_CONFIG
 
@@ -141,3 +145,30 @@ def executor_jvm_count(spark: SparkSession) -> int | None:
         return max(0, int(endpoints) - 1)
     except Exception:  # pragma: no cover - private API drift
         return None
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples or Rows in ``schema``'s
+    field order; ``schema`` a StructType or a DDL string). The one place
+    the package turns Python rows into a frame.
+
+    The rows go over as a ``pyarrow.Table``, which ``createDataFrame``
+    hands to the JVM as-is: the frame plans as a ``LocalTableScan`` and
+    no action on it starts a Python worker. A list passed to
+    ``createDataFrame`` instead becomes a pickled Python RDD (``Scan
+    ExistingRDD``), so every action on it — even writing eight bookkeeping
+    rows — pays for Python workers (~1 s against ~0.2 s on a 4-core
+    host)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

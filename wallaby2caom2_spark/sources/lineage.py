@@ -11,17 +11,27 @@ overwrite, so a wave that crashed AFTER its lineage/metrics write but
 BEFORE the checkpoint commit simply replaces its buckets' rows on the
 re-run; a plain append would double-count those clips in any consumer
 summing the dataset.
-Lineage rows carry (run_id, wave, bucket, status, clips) so the resume
-test can assert exactly-once per clip; metrics rows carry the north-rule
-counters.
+
+Where the numbers come from: the wave runner reads its written results
+back ONCE and collects ``run_metrics(written, extra_keys=("bucket",))``
+to the driver. Those rows ARE the metrics table (plus ``run_id`` and
+``wave``), and each bucket's lineage count is the sum of their ``clips``
+(0 for a bucket that produced no rows). Both sinks build their frames
+from driver-side rows through ``session.local_frame``, so writing them
+runs no Python worker and no second aggregation.
+Lineage rows carry (run_id, wave, bucket, status, clips, ts) so the
+resume test can assert exactly-once per clip; metrics rows carry the
+north-rule counters.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import types as T
+
+from ..session import local_frame
 
 
 def check_run_id(run_id: str) -> str:
@@ -61,30 +71,46 @@ def append_lineage(
     bucket_counts: list[tuple[int, int]],
 ) -> None:
     run_id = check_run_id(run_id)
-    df = spark.createDataFrame(
-        [(run_id, wave, b, "ok", int(n), float(time.time())) for b, n in bucket_counts],
-        "run_id string, wave int, bucket int, status string, clips long, ts double",
-    )
-    (
-        df.coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id", "bucket")
-        .parquet(path)
+    ts = time.time()
+    _overwrite_buckets(
+        local_frame(
+            spark,
+            [(run_id, wave, b, "ok", int(n), ts) for b, n in bucket_counts],
+            "run_id string, wave int, bucket int, status string, clips long, "
+            "ts double",
+        ),
+        path,
     )
 
 
 def append_metrics(
-    metrics: DataFrame, path: str, run_id: str, wave: int = 0
+    spark: SparkSession,
+    rows: list[Row],
+    schema: T.StructType,
+    path: str,
+    run_id: str,
+    wave: int = 0,
 ) -> None:
-    """``metrics`` must carry a ``bucket`` column (run_metrics with
-    ``extra_keys=("bucket",)``) — the overwrite key that keeps re-runs of a
-    crashed-but-sunk wave from double-counting."""
+    """``rows`` are collected ``run_metrics(..., extra_keys=("bucket",))``
+    rows and ``schema`` that frame's schema; the ``bucket`` column is the
+    overwrite key that keeps re-runs of a crashed-but-sunk wave from
+    double-counting."""
     run_id = check_run_id(run_id)
+    schema = T.StructType(
+        schema.fields
+        + [
+            T.StructField("run_id", T.StringType()),
+            T.StructField("wave", T.IntegerType()),
+        ]
+    )
+    _overwrite_buckets(
+        local_frame(spark, [(*r, run_id, wave) for r in rows], schema), path
+    )
+
+
+def _overwrite_buckets(df: DataFrame, path: str) -> None:
     (
-        metrics.withColumn("run_id", F.lit(run_id))
-        .withColumn("wave", F.lit(wave))
-        .coalesce(1)
+        df.coalesce(1)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id", "bucket")

@@ -87,6 +87,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..operators.partitioning import with_bucket
+from ..session import local_frame
 
 _META = "_meta"
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
@@ -418,7 +419,7 @@ def _empty_frame(spark: SparkSession, manifest: dict) -> DataFrame:
             "(pre-sparse-manifest table?) — cannot type an empty read"
         )
     schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def create_table(
@@ -632,9 +633,7 @@ def read_table_by_keys(
     n_buckets = manifest["n_buckets"]
     schema = T.StructType.fromJson(json.loads(manifest["schema"]))
     key_field = next(f for f in schema.fields if f.name == key)
-    kdf = spark.createDataFrame(
-        [(k,) for k in keys], T.StructType([key_field])
-    )
+    kdf = local_frame(spark, [(k,) for k in keys], T.StructType([key_field]))
     wanted = sorted(
         r["bucket"]
         for r in with_bucket(kdf, n_buckets, key=key)

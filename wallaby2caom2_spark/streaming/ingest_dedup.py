@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import audio_fp
+from ..session import local_frame
 from .stream import stream_clips
 
 SIG_SCHEMA = "clip_id string, fp bigint, batch_id bigint"
@@ -53,7 +54,7 @@ def _read_store(spark: SparkSession, sig_path: str) -> DataFrame:
     """The signature table, or an empty typed frame on the very first
     batch (no directory yet)."""
     if not os.path.isdir(sig_path):
-        return spark.createDataFrame([], SIG_SCHEMA)
+        return local_frame(spark, [], SIG_SCHEMA)
     return spark.read.schema(SIG_SCHEMA).parquet(sig_path)
 
 

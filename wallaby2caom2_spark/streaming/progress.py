@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import local_frame
+
 OPS_SCHEMA = T.StructType(
     [
         T.StructField("query_run_id", T.StringType()),
@@ -86,7 +88,9 @@ def write_ops_metrics(
     existed, and "the cron ran and saw nothing" is itself an
     operational fact."""
     recs = progress_records(query)
-    df = spark.createDataFrame(recs, OPS_SCHEMA)
+    df = local_frame(
+        spark, [[r[f] for f in OPS_SCHEMA.names] for r in recs], OPS_SCHEMA
+    )
     if recs:
         df.coalesce(1).write.mode("append").parquet(
             os.path.join(out_dir, "ops_metrics")

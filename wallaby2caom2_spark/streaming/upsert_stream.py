@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..plans.pipeline import quality_filter
+from ..session import local_frame
 from ..sources import snapshot_table
 from .stream import stream_clips
 
@@ -115,7 +116,8 @@ def run_upsert_stream(
             snapshot_table.compact(
                 spark, table_path, min_deltas=compact_min_deltas
             )
-        row = spark.createDataFrame(
+        row = local_frame(
+            spark,
             [
                 (
                     int(batch_id),
