@@ -10,6 +10,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from wallaby2caom2_spark.sources import snapshot_table as st
 
@@ -350,6 +351,51 @@ def test_update_lacking_widened_column_refused(spark, table, mode):
     got = [r.asDict() for r in st.read_table(spark, table, where=where).collect()]
     want = [r.asDict() for r in st.read_table(spark, table).filter(where).collect()]
     assert got == want and len(got) == 1
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_typed_otherwise_is_cast_to_recorded_type(spark, tmp_path, mode):
+    """The table records ``id int, seq int``; an update carrying both as
+    bigint is cast to int. Every snapshot then reads with the recorded
+    schema, and each key hashes to the bucket its row is in (a bigint
+    hashes elsewhere, which would keep two rows for one key)."""
+    path = str(tmp_path / "typed")
+    base = spark.createDataFrame([(i, i) for i in range(40)], "id int, seq int")
+    st.create_table(spark, path, base, key="id", n_buckets=8)
+    upd = spark.createDataFrame(
+        [(i, 100 + i) for i in range(5)], "id bigint, seq bigint"
+    )
+    st.merge(spark, path, upd, mode=mode)
+    df = st.read_table(spark, path)
+    assert [f.dataType.simpleString() for f in df.schema.fields] == ["int"] * 3
+    assert sorted(map(tuple, df.select("id", "seq").collect())) == [
+        (i, 100 + i if i < 5 else i) for i in range(40)
+    ]
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_differing_only_in_nested_nullability_merges(
+    spark, tmp_path, mode
+):
+    """The table records an array and a struct of non-null elements (it
+    was built from expressions); an update from ``createDataFrame`` types
+    them nullable. That is no type difference, so nothing is cast, and
+    Spark cannot cast a nullable array or struct to a non-nullable one."""
+    path = str(tmp_path / "nested")
+    base = spark.range(10).select(
+        F.col("id").cast("int").alias("id"),
+        F.array(F.lit(1), F.lit(2)).alias("a"),
+        F.struct(F.lit(1).alias("x")).alias("s"),
+    )
+    assert not base.schema["a"].dataType.containsNull
+    st.create_table(spark, path, base, key="id", n_buckets=2)
+    upd = spark.createDataFrame(
+        [(1, [3, None], (4,))], "id int, a array<int>, s struct<x:int>"
+    )
+    st.merge(spark, path, upd, mode=mode)
+    got = st.read_table(spark, path).filter("id = 1").select("a", "s.x").first()
+    assert (list(got["a"]), got["x"]) == ([3, None], 4)
+    assert st.read_table(spark, path).count() == 10
 
 
 def test_create_table_collapses_duplicate_keys(spark, tmp_path):

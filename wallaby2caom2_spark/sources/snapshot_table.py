@@ -64,6 +64,16 @@ end-to-end in tests with no mocks:
   (``_resolve_deltas``); they differ only in when it runs.
 - **Time travel** — ``read_table(..., version=N)`` resolves any retained
   manifest.
+- **One read path** — every bucket dir is read with the manifest's
+  recorded schema, so no read infers one from file footers and a
+  snapshot older than a widening merge reads the new columns as NULLs.
+  A read picks buckets in one of two ways, then scans them through
+  ``_read_buckets``: ``read_table(where=...)`` parses ``where`` with
+  Spark's own parser and drops buckets by per-bucket zone maps and, for
+  key equality and IN, by the key hash (``prune_buckets``);
+  ``read_table_by_keys`` uses that same key-hash helper
+  (``_key_buckets``). The full predicate is still applied, so a pruned
+  read is always exactly ``read_table().filter(where)``.
 
 On a multi-node cluster the table path must be shared storage where
 create-exclusive is atomic (HDFS / NFS with ``os.link`` semantics; on
@@ -76,11 +86,14 @@ clobber a committed manifest.
 
 from __future__ import annotations
 
+import decimal
 import json
 import os
 import re
 import uuid
+from functools import reduce
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -216,30 +229,69 @@ def _write_snapshot_files(
     return sid, written, stats
 
 
-def _json_safe(v):
-    """Stats values must survive the JSON manifest round trip."""
-    import decimal
+# the expression-tree node classes and literal types ``prune_buckets``
+# reads from Spark's parse of ``where``, and each literal type's Python value
+_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
+_INTEGRAL = ("byte", "short", "integer", "long")
+_LITERAL = {
+    **dict.fromkeys(_INTEGRAL, int),
+    "decimal": decimal.Decimal,
+    "double": float,
+    "string": str,
+    "boolean": "true".__eq__,
+}
+# column type -> literal types its zone map compares exactly (see
+# ``_literal_types``); strings are matched apart, by collation
+_COMPARABLE = (
+    (T.IntegralType, _INTEGRAL),
+    (T.DoubleType, (*_INTEGRAL, "decimal", "double")),
+    (T.FloatType, ("decimal", "double")),
+    (T.BooleanType, ("boolean",)),
+)
 
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    return v
+
+def _literal_types(dtype: T.DataType) -> tuple[str, ...]:
+    """The literal types (Spark type names, decimals without precision)
+    whose comparison with a ``dtype`` column Python reproduces exactly
+    from that column's zone map, because it compares in the type Spark
+    compares in:
+
+    - integral columns: integral literals (Spark compares a decimal with
+      one in a decimal type that rounds the literal once it needs more
+      than 38 digits, so ``big = 5.0000000000000000001`` matches 5);
+    - double columns: integral, decimal and double literals, as
+      ``float(lit)`` (Spark casts the literal to double);
+    - float columns: decimal and double literals, as ``float(lit)``
+      (Spark casts an integral literal to float, so it is left out);
+    - strings of the default binary collation and booleans: their own
+      type.
+
+    Empty for every other type: such a column gets no zone map. A
+    decimal's min and max do not survive the JSON manifest exactly."""
+    if dtype == T.StringType():
+        return ("string",)
+    return next((k for t, k in _COMPARABLE if isinstance(dtype, t)), ())
 
 
 def _bucket_stats(df: DataFrame) -> dict:
     """Per-bucket zone maps for data skipping: ``{bucket: {"n_rows": n,
-    "cols": {col: [min, max, null_count]}}}`` over every atomic
-    (numeric / string / boolean) column — the manifest-level analog of
-    Iceberg's per-file column stats / Delta's add-action stats. One
-    map-side-combined agg over the batch being written (bounded output:
-    n_buckets rows x statable columns), collected to the driver for the
-    manifest."""
+    "cols": {col: [min, max, null_count]}}}`` over every integral,
+    floating, string and boolean column (``_literal_types``) — the
+    manifest-level analog of Iceberg's per-file column stats / Delta's
+    add-action stats. One map-side-combined agg over the batch being
+    written (bounded output: n_buckets rows x statable columns),
+    collected to the driver for the manifest."""
     statable = [
         f.name
         for f in df.schema.fields
-        if f.name not in ("bucket", "_deleted")
-        and isinstance(
-            f.dataType, (T.NumericType, T.StringType, T.BooleanType)
-        )
+        if f.name not in ("bucket", "_deleted") and _literal_types(f.dataType)
     ]
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in statable:
@@ -251,11 +303,7 @@ def _bucket_stats(df: DataFrame) -> dict:
         out[str(r["bucket"])] = {
             "n_rows": r["_n"],
             "cols": {
-                c: [
-                    _json_safe(r[f"_min_{c}"]),
-                    _json_safe(r[f"_max_{c}"]),
-                    r[f"_nulls_{c}"],
-                ]
+                c: [r[f"_min_{c}"], r[f"_max_{c}"], r[f"_nulls_{c}"]]
                 for c in statable
             },
         }
@@ -277,131 +325,163 @@ def _merge_stats_union(base: dict | None, delta: dict | None) -> dict:
         b, d = base.get("cols", {}).get(c), delta.get("cols", {}).get(c)
         if b is None or d is None:
             # column statable on one side only (widening): rows on the
-            # other side read NULL for it, which no comparison matches —
-            # the one-sided interval remains a safe zone map
-            cols[c] = list(b or d)
+            # other side read NULL for it, which no comparison matches, so
+            # the one-sided interval remains a safe zone map — but its
+            # null count is unknown, and stays so in every later union
+            cols[c] = [*(b or d)[:2], None]
             continue
         lo = b[0] if d[0] is None else d[0] if b[0] is None else min(b[0], d[0])
         hi = b[1] if d[1] is None else d[1] if b[1] is None else max(b[1], d[1])
-        cols[c] = [lo, hi, (b[2] or 0) + (d[2] or 0)]
+        cols[c] = [lo, hi, None if None in (b[2], d[2]) else b[2] + d[2]]
     return {
         "n_rows": (base.get("n_rows") or 0) + (delta.get("n_rows") or 0),
         "cols": cols,
     }
 
 
-# string literals and backquoted names, matched left to right, so that a
-# keyword, operator or quote inside one is never read as predicate syntax
-_QUOTED_RE = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`")
-# one side of a conjunct: a name, a hidden quoted token, or a number
-_TERM = r"(\x00\d+\x00|-?\d+(?:\.\d+)?|\w+)"
-_CONJUNCT_RE = re.compile(rf"\s*{_TERM}\s*(<=|>=|<|>|=)\s*{_TERM}\s*")
-_NUMBER_RE = re.compile(r"-?\d+(?:\.\d+)?")
-_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
-
-
-def _term(term: str, hidden: list[str]) -> tuple[str, object] | None:
-    """One side of a conjunct as ``("col", name)`` or ``("lit", value)``;
-    None for anything else (a double-quoted or backquoted token — either
-    can name a column — or a typed literal such as ``5L``)."""
-    if term.startswith("\x00"):
-        tok = hidden[int(term.strip("\x00"))]
-        if tok.startswith("'"):
-            return "lit", tok[1:-1].replace("''", "'")
-        return None
-    if _NUMBER_RE.fullmatch(term):
-        return "lit", float(term) if "." in term else int(term)
-    if term.lower() in ("true", "false"):
-        return "lit", term.lower() == "true"
-    return None if term[0].isdigit() else ("col", term)
-
-
-def _conjuncts(where: str) -> list[tuple] | None:
-    """``where`` as a list of ``(column, op, literal)`` when it is a
-    top-level AND chain of such comparisons and nothing else; None for
-    any other shape. All or nothing: a part that does not parse could be
-    a fragment of CASE, BETWEEN or a comment, so pruning on the parts
-    that did parse would not be safe. Backslash escapes are not parsed."""
-    if "\\" in where or "\x00" in where:
-        return None
-    hidden: list[str] = []
-
-    def hide(m):
-        hidden.append(m.group(0))
-        return f"\x00{len(hidden) - 1}\x00"
-
-    masked = _QUOTED_RE.sub(hide, where)
-    if re.search(r"(?i)\b(or|not)\b|[()]", masked):
-        return None
-    out = []
-    for part in re.split(r"(?i)\band\b", masked):
-        m = _CONJUNCT_RE.fullmatch(part)
-        if not m:
-            return None
-        left, op, right = m.groups()
-        lt, rt = _term(left, hidden), _term(right, hidden)
-        kinds = (lt and lt[0], rt and rt[0])
-        if kinds == ("col", "lit"):
-            out.append((left, op, rt[1]))
-        elif kinds == ("lit", "col"):
-            out.append((right, _FLIP[op], lt[1]))
-        else:
-            return None
-    return out
-
-
-def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
-    """True when the zone map PROVES no row in the bucket satisfies
-    ``col op lit``. NULL cells never satisfy a comparison (SQL
-    three-valued logic), so an all-NULL interval (min=max=None) excludes
-    every comparison; mixed types fall back to not-prunable."""
-    lo, hi = col_stats[0], col_stats[1]
-    if lo is None and hi is None:
-        return True  # every row NULL for this column
+def _parse(where: str) -> dict | None:
+    """``where`` as the active session's parser reads it — one JVM call
+    returns the unresolved tree as a flat pre-order node list — rebuilt
+    as nested nodes (``class``, the node's own fields, ``children``);
+    None when it does not parse (the filter then reports the error)."""
+    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
     try:
-        if op == "=":
-            return lit < lo or lit > hi
-        if op == "<":
-            return lo >= lit
-        if op == "<=":
-            return lo > lit
-        if op == ">":
-            return hi <= lit
-        if op == ">=":
-            return hi < lit
-    except TypeError:
-        return False
-    return False
+        nodes = iter(json.loads(parser.parseExpression(where).toJSON()))
+    except ParseException:
+        return None
+
+    def tree() -> dict:
+        node = next(nodes)
+        node["children"] = [tree() for _ in range(node["num-children"])]
+        return node
+
+    return tree()
+
+
+def _literal(node: dict) -> tuple[str, object] | None:
+    """``(type, value)`` of a literal node — the Spark type name with a
+    decimal's precision dropped, and the value (None for NULL); None for
+    any other node or a literal type no zone map compares with."""
+    if not node["class"].endswith(".Literal"):
+        return None
+    kind, value = node["dataType"].split("(")[0], node["value"]
+    if value is None:
+        return kind, None
+    return (kind, _LITERAL[kind](value)) if kind in _LITERAL else None
+
+
+def _column(node: dict, fields: dict) -> T.StructField | None:
+    """The schema field a column reference names, matched without case
+    like Spark's default resolution; None for anything else, including a
+    multi-part name (``a.b``)."""
+    if not node["class"].endswith(".UnresolvedAttribute"):
+        return None
+    name = node["nameParts"][1:-1]  # "[a, b]" for a.b
+    return None if ", " in name else fields.get(name.lower())
+
+
+def _tests(node: dict, fields: dict) -> list[tuple]:
+    """The top-level AND chain under ``node`` as ``(field, op, literals)``
+    tests, ``op`` a comparison, ``"in"`` or ``"isnull"`` (BETWEEN is its
+    two comparisons); a conjunct nothing is proven from adds none."""
+    cls, kids = node["class"].rsplit(".", 1)[1], node["children"]
+    if cls == "And":
+        return _tests(kids[0], fields) + _tests(kids[1], fields)
+    op = _OPS.get(cls)
+    if op and _literal(kids[0]):  # literal op column
+        kids, op = kids[::-1], _FLIP[op]
+    field = _column(kids[0], fields) if kids else None
+    lits = [_literal(k) for k in kids[1:]]
+    if not field or not all(lits):
+        return []
+    if op or cls in ("In", "IsNull"):
+        return [(field, op or cls.lower(), lits)]
+    if node.get("nameParts", "").lower() == "[between]" and len(lits) == 2:
+        return [(field, ">=", lits[:1]), (field, "<=", lits[1:])]
+    return []
+
+
+def _excludes(col_stats: list, op: str, values: list) -> bool:
+    """True when the zone map ``[min, max, null_count]`` PROVES no row in
+    the bucket passes the test. NULL passes no comparison and no IN (SQL
+    three-valued logic), so an all-NULL column, or a test with no
+    non-NULL literal, excludes the bucket."""
+    lo, hi, nulls = col_stats
+    if op == "isnull":
+        return nulls == 0
+    if lo is None or not values:
+        return True
+    if op == "in":
+        return all(v < lo or v > hi for v in values)
+    (v,) = values
+    return {
+        "=": v < lo or v > hi,
+        "<": lo >= v,
+        "<=": lo > v,
+        ">": hi <= v,
+        ">=": hi < v,
+    }[op]
 
 
 def prune_buckets(manifest: dict, where: str) -> list[int] | None:
-    """Buckets that MAY hold rows matching ``where``, from the
-    manifest's zone maps — or None when pruning cannot be proven safe
-    (any shape other than a top-level AND chain of ``col (<|<=|>|>=|=)
-    literal`` comparisons, or a pre-stats manifest). The returned list
-    feeds ``_read_buckets`` — the same code path as explicit bucket
-    selection, so pruned reads stay on the ordinary scan plan."""
+    """Buckets that MAY hold rows matching ``where``, or None when no
+    part of it proves anything.
+
+    ``where`` is parsed by the active session's SQL parser and split on
+    its top-level ANDs; any one conjunct may exclude a bucket, and a
+    conjunct nothing is proven from keeps every bucket. A conjunct
+    proves something when it is ``col (=|<|<=|>|>=) literal`` (either
+    order), ``col IN (literals)``, ``col BETWEEN literal AND literal`` or
+    ``col IS NULL`` on a single-part column name:
+
+    - against the manifest's zone maps, compared in the type Spark
+      compares in (``_literal_types``; any other pairing, a DATE literal
+      for one, proves nothing);
+    - ``key = literal`` and ``key IN (...)`` also by the hash that placed
+      the rows (``_key_buckets``), for literals of the key's own type.
+
+    The returned list feeds ``_read_buckets`` — the same code path as
+    explicit bucket selection, so pruned reads stay on the ordinary scan
+    plan."""
+    tree = _parse(where)
+    if tree is None:
+        return None
+    schema = _schema(manifest)
+    names = [f.name.lower() for f in schema.fields]
+    fields = {
+        n: f for n, f in zip(names, schema.fields) if names.count(n) == 1
+    }
     stats: dict = manifest.get("stats") or {}
-    if not stats:
+    key_sets, zone = [], []
+    for field, op, lits in _tests(tree, fields):
+        kinds = {kind for kind, v in lits if v is not None}
+        values = [v for _kind, v in lits if v is not None]
+        if field.name == manifest["key"] and op in ("=", "in") and (
+            kinds <= {field.dataType.jsonValue()}
+        ):
+            spark = SparkSession.active()
+            key_sets.append(_key_buckets(spark, manifest, values))
+        if stats and kinds <= set(_literal_types(field.dataType)):
+            if isinstance(field.dataType, T.FractionalType):
+                values = [float(v) for v in values]
+            zone.append((field.name, op, values))
+    if not key_sets and not zone:
         return None
-    conjuncts = _conjuncts(where)
-    if not conjuncts:
-        return None
-    all_buckets = set(manifest["buckets"]) | set(manifest.get("deltas", {}))
-    kept = []
-    for b in sorted(all_buckets, key=int):
-        entry = stats.get(b)
-        if entry is None:
-            kept.append(int(b))  # no zone map for this bucket: keep it
-            continue
-        excluded = any(
-            c in entry.get("cols", {})
-            and _conjunct_excludes(entry["cols"][c], op, lit)
-            for c, op, lit in conjuncts
+
+    def kept(b: str) -> bool:
+        cols = stats.get(b, {}).get("cols", {})
+        return all(int(b) in s for s in key_sets) and not any(
+            c in cols and _excludes(cols[c], op, values)
+            for c, op, values in zone
         )
-        if not excluded:
-            kept.append(int(b))
-    return kept
+
+    live = set(manifest["buckets"]) | set(manifest.get("deltas", {}))
+    return [int(b) for b in sorted(live, key=int) if kept(b)]
+
+
+def _schema(manifest: dict) -> T.StructType:
+    """The read schema the manifest records, bucket column included."""
+    return T.StructType.fromJson(json.loads(manifest["schema"]))
 
 
 def _schema_with_bucket(df: DataFrame) -> str:
@@ -410,16 +490,6 @@ def _schema_with_bucket(df: DataFrame) -> str:
     fields = [f for f in df.schema.fields if f.name != "bucket"]
     fields.append(T.StructField("bucket", T.IntegerType(), True))
     return json.dumps(T.StructType(fields).jsonValue())
-
-
-def _empty_frame(spark: SparkSession, manifest: dict) -> DataFrame:
-    if "schema" not in manifest:
-        raise ValueError(
-            "no buckets to read and the manifest records no schema "
-            "(pre-sparse-manifest table?) — cannot type an empty read"
-        )
-    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-    return local_frame(spark, [], schema)
 
 
 def create_table(
@@ -483,29 +553,30 @@ def _commit_rewrite(
 
 
 def _union_snap_reads(
-    spark: SparkSession, path: str, rels: list[str]
-) -> DataFrame | None:
-    """Union the bucket dirs in ``rels`` (grouped so dirs from one
-    snapshot share a basePath read that restores the partition column).
-    Returns None for an empty selection."""
+    spark: SparkSession, path: str, rels: list[str], schema: T.StructType
+) -> DataFrame:
+    """Union the bucket dirs in ``rels``, each read with ``schema`` — the
+    manifest's recorded one — so no read infers a schema from file
+    footers (a Spark job per read) and a snapshot written before a
+    schema-widening merge reads the new columns as typed NULLs (the
+    standard lakehouse evolution contract). Dirs from one snapshot share
+    a basePath read that restores the partition column. An empty
+    selection is a typed empty frame."""
     by_snap: dict[str, list[str]] = {}
     for rel in rels:
         by_snap.setdefault(os.path.dirname(rel), []).append(rel)
-    df = None
-    for snap_rel, group in sorted(by_snap.items()):
-        p = spark.read.option(
-            "basePath", os.path.join(path, snap_rel)
-        ).parquet(*[os.path.join(path, r) for r in group])
-        # allowMissingColumns: snapshots written before a schema-widening
-        # merge lack the new columns — their rows read back as NULL (the
-        # standard lakehouse evolution contract)
-        df = p if df is None else df.unionByName(p, allowMissingColumns=True)
-    return df
+    reads = [
+        spark.read.schema(schema)
+        .option("basePath", os.path.join(path, snap_rel))
+        .parquet(*[os.path.join(path, r) for r in group])
+        for snap_rel, group in sorted(by_snap.items())
+    ]
+    if not reads:
+        return local_frame(spark, [], schema)
+    return reduce(DataFrame.union, reads)
 
 
-def _resolve_deltas(
-    base: DataFrame | None, delta: DataFrame, key: str
-) -> DataFrame:
+def _resolve_deltas(base: DataFrame, delta: DataFrame, key: str) -> DataFrame:
     """Latest-wins resolution, shared by merge-on-read reads and the
     copy-on-write merge: latest ``_seq`` wins per key, tombstones
     (``_deleted``) drop the key. ``base`` rows carry ``_seq = -1``; each
@@ -515,13 +586,10 @@ def _resolve_deltas(
     COW's updated/inserted/deleted counts need; a read drops it and the
     optimizer prunes its window function. The shuffle this costs is
     confined to the delta'd buckets — the documented MOR read tax."""
-    if base is not None:
-        base = base.withColumn("_seq", F.lit(-1)).withColumn(
-            "_deleted", F.lit(False)
-        )
-        merged = base.unionByName(delta, allowMissingColumns=True)
-    else:
-        merged = delta
+    base = base.withColumn("_seq", F.lit(-1)).withColumn(
+        "_deleted", F.lit(False)
+    )
+    merged = base.unionByName(delta, allowMissingColumns=True)
     by_key = Window.partitionBy(key)
     return (
         merged.withColumn(
@@ -551,48 +619,32 @@ def _read_buckets(
         if buckets is not None
         else set(manifest["buckets"]) | set(deltas)
     )
-    clean_rels = [
-        rel
-        for b, rel in manifest["buckets"].items()
-        if b in wanted and b not in deltas
-    ]
-    clean = _union_snap_reads(spark, path, clean_rels)
-
+    schema = _schema(manifest)
+    clean_rels, base_rels = [], []
+    for b, rel in manifest["buckets"].items():
+        if b in wanted:
+            (base_rels if b in deltas else clean_rels).append(rel)
+    clean = _union_snap_reads(spark, path, clean_rels, schema)
     delta_buckets = sorted(b for b in wanted if b in deltas)
-    resolved = None
-    if delta_buckets:
-        base_rels = [
-            manifest["buckets"][b]
-            for b in delta_buckets
-            if b in manifest["buckets"]
-        ]
-        base = _union_snap_reads(spark, path, base_rels)
-        # group delta dirs by committing version (one snapshot dir per
-        # commit), so the whole pending chain is a handful of reads
-        by_seq: dict[int, list[str]] = {}
-        for b in delta_buckets:
-            for seq, rel in deltas[b]:
-                by_seq.setdefault(int(seq), []).append(rel)
-        delta_df = None
-        for seq in sorted(by_seq):
-            d = _union_snap_reads(spark, path, by_seq[seq])
-            d = d.withColumn("_seq", F.lit(int(seq)))
-            delta_df = (
-                d
-                if delta_df is None
-                else delta_df.unionByName(d, allowMissingColumns=True)
-            )
-        resolved = _resolve_deltas(base, delta_df, manifest["key"]).drop(
-            "_in_base"
-        )
-
-    if clean is None and resolved is None:
-        return _empty_frame(spark, manifest)
-    if clean is None:
-        return resolved
-    if resolved is None:
+    if not delta_buckets:
         return clean
-    return clean.unionByName(resolved, allowMissingColumns=True)
+    base = _union_snap_reads(spark, path, base_rels, schema)
+    # group delta dirs by committing version (one snapshot dir per commit),
+    # so the whole pending chain is a handful of reads
+    by_seq: dict[int, list[str]] = {}
+    for b in delta_buckets:
+        for seq, rel in deltas[b]:
+            by_seq.setdefault(int(seq), []).append(rel)
+    delta_schema = T.StructType(
+        [*schema.fields, T.StructField("_deleted", T.BooleanType())]
+    )
+    delta = None
+    for seq, rels in sorted(by_seq.items()):
+        d = _union_snap_reads(spark, path, rels, delta_schema)
+        d = d.withColumn("_seq", F.lit(seq))
+        delta = d if delta is None else delta.union(d)
+    resolved = _resolve_deltas(base, delta, manifest["key"])
+    return clean.unionByName(resolved.drop("_in_base"))
 
 
 def read_table(
@@ -602,13 +654,14 @@ def read_table(
     where: str | None = None,
 ) -> DataFrame:
     """The table at ``version`` (default: current), bucket column
-    included. With ``where``, the manifest's zone maps prune buckets the
-    predicate provably cannot match BEFORE any file is listed or
-    scanned (data skipping — the manifest-level analog of Iceberg/Delta
-    column stats), and the full predicate is still applied to the
+    included. With ``where``, ``prune_buckets`` drops the buckets the
+    predicate provably cannot match BEFORE any file is listed or scanned
+    — by the manifest's zone maps (data skipping, the manifest-level
+    analog of Iceberg/Delta column stats) and, for key equality and IN,
+    by the key hash — and the full predicate is still applied to the
     survivors, so the result is always exactly ``read_table(...)
-    .filter(where)``. Pruning is conservative: unsupported predicate
-    shapes skip nothing and just filter."""
+    .filter(where)``. Pruning is conservative: a conjunct it proves
+    nothing from skips nothing and just filters."""
     manifest = read_manifest(path, version)
     if where is None:
         return _read_buckets(spark, path, manifest, None)
@@ -617,38 +670,39 @@ def read_table(
     return df.filter(F.expr(where))
 
 
+def _key_buckets(
+    spark: SparkSession, manifest: dict, values: list
+) -> list[int]:
+    """The buckets ``pmod(xxhash64(key), n_buckets)`` puts ``values`` in:
+    the hash that PLACED each row also FINDS it. The values are typed by
+    the recorded key field, so each hashes as a stored key does; the
+    frame plans as a ``LocalTableScan``, so this starts no Spark job."""
+    key_schema = T.StructType([_schema(manifest)[manifest["key"]]])
+    kdf = local_frame(spark, [(v,) for v in values], key_schema)
+    rows = with_bucket(kdf, manifest["n_buckets"], key=manifest["key"])
+    return sorted({r["bucket"] for r in rows.select("bucket").collect()})
+
+
 def read_table_by_keys(
     spark: SparkSession,
     path: str,
     keys: list,
     version: int | None = None,
 ) -> DataFrame:
-    """Point-lookup path: the bucket hash that PLACED each key also
-    FINDS it — ``pmod(xxhash64(key), n_buckets)`` computed driver-side
-    selects only the buckets that can hold the requested keys, then an
-    in-plan ``isin`` filters the survivors. A k-key lookup on a
+    """Point-lookup path: ``_key_buckets`` selects only the buckets that
+    can hold the requested keys (the selection starts no Spark job), and
+    an in-plan ``isin`` filters the survivors. A k-key lookup on a
     10^12-row table scans ≤ k buckets, not the table."""
     manifest = read_manifest(path, version)
-    key = manifest["key"]
-    n_buckets = manifest["n_buckets"]
-    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-    key_field = next(f for f in schema.fields if f.name == key)
-    kdf = local_frame(spark, [(k,) for k in keys], T.StructType([key_field]))
-    wanted = sorted(
-        r["bucket"]
-        for r in with_bucket(kdf, n_buckets, key=key)
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
+    wanted = _key_buckets(spark, manifest, keys)
     df = _read_buckets(spark, path, manifest, wanted)
-    return df.filter(F.col(key).isin(list(keys)))
+    return df.filter(F.col(manifest["key"]).isin(list(keys)))
 
 
 def _widened_schema_json(manifest: dict, upd: DataFrame) -> str:
     """The read schema after a widening merge: every existing field in
     its recorded order, then any NEW update columns, bucket last."""
-    existing = T.StructType.fromJson(json.loads(manifest["schema"]))
+    existing = _schema(manifest)
     have = {f.name for f in existing.fields}
     fields = [f for f in existing.fields if f.name != "bucket"]
     for f in upd.schema.fields:
@@ -720,7 +774,10 @@ def merge(
     manifest records the superset schema, and rows written before it
     read back NULL for the new columns (``_read_buckets``). Updates may
     NOT lack a column the manifest records: it would silently NULL
-    matched rows' retained values, so it raises instead.
+    matched rows' retained values, so it raises instead. An update
+    column typed otherwise than the recorded one is cast to it (a value
+    the recorded type cannot hold fails the cast); nullability, nested
+    too, is not compared, since a read makes every field nullable.
 
     ``mode="mor"`` (merge-on-read) writes ONLY the batch as per-bucket
     delta file groups appended to the manifest's delta lists: O(batch)
@@ -739,11 +796,8 @@ def merge(
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
     base = read_manifest(path)
     key = base["key"]
-    batch = with_bucket(
-        _dedup_updates(updates, key, order_col), base["n_buckets"], key=key
-    )
-    recorded = {f["name"] for f in json.loads(base["schema"])["fields"]}
-    dropped = recorded - {"bucket"} - set(batch.columns)
+    recorded = [f for f in _schema(base).fields if f.name != "bucket"]
+    dropped = {f.name for f in recorded} - set(updates.columns)
     if dropped:
         raise ValueError(
             f"updates are missing existing columns {sorted(dropped)}: "
@@ -751,6 +805,21 @@ def merge(
             "silently NULL matched rows' retained values) — carry every "
             "existing column; new columns (widening) are fine"
         )
+    # existing columns keep their recorded types: every file then reads
+    # with the recorded schema, and a key hashes to its rows' bucket.
+    # simpleString leaves nullability out: Spark cannot cast a nullable
+    # array, map or struct to a non-nullable one
+    updates = updates.withColumns(
+        {
+            f.name: F.col(f.name).cast(f.dataType)
+            for f in recorded
+            if updates.schema[f.name].dataType.simpleString()
+            != f.dataType.simpleString()
+        }
+    )
+    batch = with_bucket(
+        _dedup_updates(updates, key, order_col), base["n_buckets"], key=key
+    )
     is_del = (
         F.lit(False)
         if delete_where is None
@@ -913,9 +982,7 @@ def compact(
     # put-if-absent protocol, not by a torn scan)
     df = df.localCheckpoint(eager=True)
     # compaction restores exact zone maps for the rewritten buckets
-    version, _dirs = _commit_rewrite(
-        path, base, df, targets, base.get("schema") or _schema_with_bucket(df)
-    )
+    version, _dirs = _commit_rewrite(path, base, df, targets, base["schema"])
     return {**out, "version": version, "rewritten_buckets": targets}
 
 
@@ -948,11 +1015,7 @@ def rebucket(spark: SparkSession, path: str, new_n_buckets: int) -> dict:
     df = with_bucket(df, new_n_buckets, key=base["key"])
     df = df.localCheckpoint(eager=True)  # pin the read to the base version
     version, dirs = _commit_rewrite(
-        path,
-        {**base, "n_buckets": new_n_buckets},
-        df,
-        None,
-        base.get("schema") or _schema_with_bucket(df),
+        path, {**base, "n_buckets": new_n_buckets}, df, None, base["schema"]
     )
     return {
         "version": version,
