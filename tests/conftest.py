@@ -102,6 +102,22 @@ def _spark_alive(request):
     _ensure_live(request.config, "spark" in request.fixturenames)
 
 
+@pytest.fixture
+def new_jobs(spark):
+    """``new_jobs(fn)`` runs ``fn()`` and returns its result and the ids
+    of the Spark jobs it started, read once the listener bus has delivered
+    every job event."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return out, set(sc.statusTracker().getJobIdsForGroup(None)) - before
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def clips_rows():
     """Deterministic e2e fixture rows (seed pinned — the committed golden

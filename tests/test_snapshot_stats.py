@@ -17,7 +17,9 @@ add-action stats). Invariants:
 - a pruned read returns columns added after its buckets were written
   (as NULLs);
 - ``read_table_by_keys`` and key predicates pick buckets through one
-  key-hash helper, which starts no Spark job.
+  key-hash helper, which starts no Spark job;
+- a commit's stats read-back reads with the written frame's schema, so
+  no job infers it from the footers.
 """
 
 from __future__ import annotations
@@ -327,16 +329,7 @@ def test_decimal_column_is_never_pruned(spark, tmp_path):
     ) == ["a"]
 
 
-def _new_jobs(spark, fn):
-    """``fn()`` and the ids of the Spark jobs it started."""
-    sc = spark.sparkContext
-    before = set(sc.statusTracker().getJobIdsForGroup(None))
-    out = fn()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, set(sc.statusTracker().getJobIdsForGroup(None)) - before
-
-
-def test_key_bucket_selection_starts_no_job(spark, table):
+def test_key_bucket_selection_starts_no_job(spark, table, new_jobs):
     m = st.read_manifest(table)
     keys = ["k0005", "k0350"]
 
@@ -347,7 +340,7 @@ def test_key_bucket_selection_starts_no_job(spark, table):
             st.prune_buckets(m, "'k0005' = clip_id AND v >= 0"),
         )
 
-    (df, kept_in, kept_eq), jobs = _new_jobs(spark, plan)
+    (df, kept_in, kept_eq), jobs = new_jobs(plan)
     assert jobs == set()
     assert sorted(r["clip_id"] for r in df.collect()) == keys
     # the lookup and the key conjuncts select buckets through one hash
@@ -356,6 +349,18 @@ def test_key_bucket_selection_starts_no_job(spark, table):
     assert _assert_where_equals_filter(
         spark, table, "clip_id IN ('k0005', 'k0350', NULL)"
     ) == keys
+
+
+def test_mor_merge_stats_read_infers_no_schema(spark, tmp_path, new_jobs):
+    """A 16-row MOR merge on a 4-bucket table runs at most 9 Spark jobs:
+    one fewer than when its stats read-back inferred the written files'
+    schema from their footers."""
+    path = str(tmp_path / "mor_jobs_tbl")
+    st.create_table(spark, path, _df(spark, _rows(64)), key="clip_id", n_buckets=4)
+    batch = _df(spark, [(f"k{i:04d}", -i, 0.5, "u") for i in range(0, 96, 6)])
+    info, jobs = new_jobs(lambda: st.merge(spark, path, batch, mode="mor"))
+    assert info["delta_rows"] == 16
+    assert len(jobs) <= 9, sorted(jobs)
 
 
 # -- property test: pruning is sound on generated predicate shapes ----------

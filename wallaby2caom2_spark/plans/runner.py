@@ -9,12 +9,16 @@ bounded Spark job, committed atomically:
 
     write results (dynamic partition overwrite, per-bucket dirs)
     → read them back once: collect run_metrics per (bucket, outcome)
-    → append lineage (per-bucket sums of those rows' clips, zero-filled)
+    → overwrite lineage (per-bucket sums of those rows' clips, zero-filled)
       + metrics (the same rows) → mark buckets done in the checkpoint.
 
-The bookkeeping tables are built from the collected rows on the driver
-(``session.local_frame``), so the only Spark jobs after the results
-write are the one read-back aggregation and the two small sink writes.
+A wave runs four Spark jobs: two for the results write (the pipeline and
+its bucket exchange) and two for the read-back aggregation (AQE splits
+it). The read-back reads with the written frame's schema, which is known
+without a job, so no job infers it from footers. The lineage and metrics
+rows are written by the driver with pyarrow (``sources/lineage.py``):
+each ``(run_id, bucket)`` directory's file is replaced by one atomic
+rename, and no Spark job runs for them.
 
 A crash between any two steps re-runs at most one wave; the overwrite makes
 that idempotent — exactly-once per clip at read time (tests/test_resume.py
@@ -26,7 +30,6 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +37,6 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators.partitioning import with_bucket
 from ..sources import checkpoint as ckpt_mod
 from ..sources import clips as clips_src
-from ..sources.clips import _is_schemaless_read
 from ..sources import lineage as lineage_src
 from .pipeline import quality_filter, run_metrics
 
@@ -101,48 +103,34 @@ def run_resumable(
         result = result.repartition(len(bucket_group), F.col("bucket"))
         clips_src.write_results(result, results_path, partition_by="bucket")
 
-        try:
-            metrics = run_metrics(
-                spark.read.parquet(results_path).filter(
-                    F.col("bucket").isin(bucket_group)
-                ),
-                extra_keys=("bucket",),
-            )
-            metric_rows = metrics.collect()
-        except AnalysisException as e:
-            # an all-empty first wave writes no parquet footers at all, so
-            # the read-back cannot infer a schema — commit the (empty)
-            # buckets with zero-count lineage instead of aborting the run.
-            # ONLY that case: any other read failure (storage hiccup,
-            # executor loss) must abort, or the checkpoint would commit
-            # buckets with silently-zero lineage and a metrics gap.
-            if not _is_schemaless_read(e):
-                raise
-            metric_rows = []
-        # every committed bucket gets a lineage row: in a partially-empty
-        # wave the aggregation sees only buckets that produced rows, so the
-        # empty ones keep an explicit 0 — the same row the all-empty
-        # (schemaless read) case writes, keeping lineage bucket coverage
-        # identical across the two paths
+        # an all-empty wave writes no file, but the results dir exists, so
+        # this read with a given schema returns no rows instead of failing
+        metrics = run_metrics(
+            spark.read.schema(result.schema)
+            .parquet(results_path)
+            .filter(F.col("bucket").isin(bucket_group)),
+            extra_keys=("bucket",),
+        )
+        metric_rows = metrics.collect()
+        # every committed bucket gets a lineage row: the aggregation sees
+        # only buckets that produced rows, so the empty ones keep an
+        # explicit 0
         counts = dict.fromkeys(bucket_group, 0)
         for r in metric_rows:
             counts[r["bucket"]] += r["clips"]
         lineage_src.append_lineage(
-            spark,
             os.path.join(out_dir, "lineage"),
             run_id,
             wave_i,
             list(counts.items()),
         )
-        if metric_rows:
-            lineage_src.append_metrics(
-                spark,
-                metric_rows,
-                metrics.schema,
-                os.path.join(out_dir, "metrics"),
-                run_id,
-                wave_i,
-            )
+        lineage_src.append_metrics(
+            metric_rows,
+            metrics.schema,
+            os.path.join(out_dir, "metrics"),
+            run_id,
+            wave_i,
+        )
         ckpt.mark_done(set(bucket_group))
         committed.extend(bucket_group)
         if fail_after_wave is not None and wave_i >= fail_after_wave:

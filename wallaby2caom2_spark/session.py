@@ -147,28 +147,39 @@ def executor_jvm_count(spark: SparkSession) -> int | None:
         return None
 
 
+def local_table(
+    rows: Iterable[Sequence], schema: T.StructType | str
+) -> pa.Table:
+    """A ``pyarrow.Table`` of driver-side ``rows`` (tuples or Rows in
+    ``schema``'s field order; ``schema`` a StructType or a DDL string),
+    typed by Spark's own schema→Arrow mapping. The one place the package
+    types Python rows: ``local_frame`` hands the table to the JVM, and the
+    lineage sink writes it to Parquet from the driver."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def local_frame(
     spark: SparkSession,
     rows: Iterable[Sequence],
     schema: T.StructType | str,
 ) -> DataFrame:
-    """A DataFrame of driver-side ``rows`` (tuples or Rows in ``schema``'s
-    field order; ``schema`` a StructType or a DDL string). The one place
-    the package turns Python rows into a frame.
+    """A DataFrame of driver-side ``rows`` (see ``local_table``). The one
+    place the package turns Python rows into a frame.
 
-    The rows go over as a ``pyarrow.Table``, which ``createDataFrame``
-    hands to the JVM as-is: the frame plans as a ``LocalTableScan`` and
-    no action on it starts a Python worker. A list passed to
-    ``createDataFrame`` instead becomes a pickled Python RDD (``Scan
-    ExistingRDD``), so every action on it — even writing eight bookkeeping
-    rows — pays for Python workers (~1 s against ~0.2 s on a 4-core
-    host)."""
+    The rows go over as ``local_table``'s ``pyarrow.Table``, which
+    ``createDataFrame`` hands to the JVM as-is: the frame plans as a
+    ``LocalTableScan`` and no action on it starts a Python worker. A list
+    passed to ``createDataFrame`` instead becomes a pickled Python RDD
+    (``Scan ExistingRDD``), so every action on it — even writing eight
+    bookkeeping rows — pays for Python workers (~1 s against ~0.2 s on a
+    4-core host)."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
-        schema=arrow_schema,
-    )
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(local_table(rows, schema), schema)

@@ -205,7 +205,8 @@ def _write_snapshot_files(
     column pruning means only the atomic statable columns are scanned
     (the audio payload bytes never leave the footers), so the stats
     pass costs a slim column scan of the batch, not a second full
-    materialization of the plan."""
+    materialization of the plan. The read takes ``df``'s own schema,
+    known without a job, so no job infers it from the footers."""
     sid = "s" + uuid.uuid4().hex[:12]
     snap_rel = os.path.join("data", sid)
     (
@@ -221,10 +222,11 @@ def _write_snapshot_files(
             written[b] = os.path.join(snap_rel, name)
     stats: dict = {}
     if written:
-        spark = df.sparkSession
-        back = spark.read.option(
-            "basePath", os.path.join(path, snap_rel)
-        ).parquet(*[os.path.join(path, r) for r in written.values()])
+        back = (
+            df.sparkSession.read.schema(df.schema)
+            .option("basePath", os.path.join(path, snap_rel))
+            .parquet(*[os.path.join(path, r) for r in written.values()])
+        )
         stats = _bucket_stats(back)
     return sid, written, stats
 
