@@ -18,14 +18,26 @@ add-action stats). Invariants:
   (as NULLs);
 - ``read_table_by_keys`` and key predicates pick buckets through one
   key-hash helper, which starts no Spark job;
-- a commit's stats read-back reads with the written frame's schema, so
-  no job infers it from the footers.
+- a commit's zone maps come from the written files' parquet footers and
+  equal a Spark ``groupBy("bucket")`` min/max/null count over those
+  files (NaN highest, ``-0.0`` equal to ``0.0``); a column the footer
+  states no bounds for is recorded as unstated and never prunes; a
+  commit runs no job for its stats, so a MOR merge runs at most 4 jobs,
+  ``create_table`` 3 and ``compact`` 4;
+- an unparsable ``where`` is reported once, by the filter.
 """
 
 from __future__ import annotations
 
+import glob
+import logging
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
+from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import functions as F
 
 from wallaby2caom2_spark.sources import snapshot_table as st
@@ -352,15 +364,285 @@ def test_key_bucket_selection_starts_no_job(spark, table, new_jobs):
 
 
 def test_mor_merge_stats_read_infers_no_schema(spark, tmp_path, new_jobs):
-    """A 16-row MOR merge on a 4-bucket table runs at most 9 Spark jobs:
-    one fewer than when its stats read-back inferred the written files'
-    schema from their footers."""
+    """A 16-row MOR merge on a 4-bucket table runs at most 4 Spark jobs:
+    its zone maps and row count come from the written footers, and the
+    write plans its partitions without a sampling job."""
     path = str(tmp_path / "mor_jobs_tbl")
     st.create_table(spark, path, _df(spark, _rows(64)), key="clip_id", n_buckets=4)
     batch = _df(spark, [(f"k{i:04d}", -i, 0.5, "u") for i in range(0, 96, 6)])
     info, jobs = new_jobs(lambda: st.merge(spark, path, batch, mode="mor"))
     assert info["delta_rows"] == 16
-    assert len(jobs) <= 9, sorted(jobs)
+    assert len(jobs) <= 4, sorted(jobs)
+
+
+def test_create_and_compact_job_counts(spark, tmp_path, new_jobs):
+    """``create_table`` runs at most 3 Spark jobs and ``compact
+    (min_deltas=4)`` at most 4: neither reads back what it wrote."""
+    path = str(tmp_path / "jobs_tbl")
+    df = _df(spark, _rows())
+    m, jobs = new_jobs(
+        lambda: st.create_table(spark, path, df, key="clip_id", n_buckets=4)
+    )
+    assert sum(s["n_rows"] for s in m["stats"].values()) == 400
+    assert len(jobs) <= 3, sorted(jobs)
+    for r in range(4):
+        batch = _df(spark, [(f"k{i:04d}", -i, 0.5, "u") for i in range(r, 96, 6)])
+        st.merge(spark, path, batch, mode="mor")
+    out, jobs = new_jobs(lambda: st.compact(spark, path, min_deltas=4))
+    assert out["rewritten_buckets"]
+    assert len(jobs) <= 4, sorted(jobs)
+    assert st.read_table(spark, path).count() == 400
+
+
+def test_empty_mor_merge_changes_nothing(spark, table):
+    before = st.current_version(table)
+    data = os.path.join(table, "data")
+    dirs = sorted(os.listdir(data))
+    out = st.merge(spark, table, _df(spark, []), mode="mor")
+    assert out["version"] == out["base_version"] == before
+    assert (out["touched_buckets"], out["delta_rows"]) == ([], 0)
+    assert st.current_version(table) == before
+    assert sorted(os.listdir(data)) == dirs
+
+
+@pytest.mark.parametrize("where, logged", [("v >", 0), ("v > 1e400", 1)])
+def test_unparsable_where_is_reported_once(spark, table, where, logged):
+    """Pruning an unparsable ``where`` fails silently; the pruned read
+    raises the parser's error and logs what an unpruned read logs.
+    PySpark logs a parse error at ERROR when the error carries a query
+    context (an out-of-range literal does, a syntax error does not). The
+    records are taken from the logger itself: its handler keeps the
+    stream it was created with, which fd capture does not see."""
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    records: list = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger.addHandler(handler)
+    try:
+        assert st.prune_buckets(st.read_manifest(table), where) is None
+        assert records == []
+        with pytest.raises(ParseException) as got:
+            st.read_table(spark, table, where=where)
+        assert len(records) == logged
+        with pytest.raises(ParseException) as want:
+            st.read_table(spark, table).filter(where)
+        assert len(records) == 2 * logged
+    finally:
+        logger.removeHandler(handler)
+    assert got.value.getCondition() == want.value.getCondition()
+    assert str(got.value) == str(want.value)
+    assert not logger.disabled
+
+
+# -- zone maps from the footers equal a Spark aggregation -------------------
+
+
+def _oracle_stats(df) -> dict:
+    """Per-bucket zone maps computed by Spark over ``df``: row count and
+    min, max and null count of every statable column."""
+    statable = [
+        f.name
+        for f in df.schema.fields
+        if f.name not in ("bucket", "_deleted") and st._literal_types(f.dataType)
+    ]
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    for c in statable:
+        aggs.append(F.min(c).alias(f"_min_{c}"))
+        aggs.append(F.max(c).alias(f"_max_{c}"))
+        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"_nulls_{c}"))
+    return {
+        str(r["bucket"]): {
+            "n_rows": r["_n"],
+            "cols": {
+                c: [r[f"_min_{c}"], r[f"_max_{c}"], r[f"_nulls_{c}"]]
+                for c in statable
+            },
+        }
+        for r in df.groupBy("bucket").agg(*aggs).collect()
+    }
+
+
+def _same(a, b) -> bool:
+    """Equal as zone maps: NaN equals NaN, ``-0.0`` equals ``0.0``."""
+    if isinstance(a, dict):
+        return (
+            isinstance(b, dict)
+            and a.keys() == b.keys()
+            and all(_same(a[k], b[k]) for k in a)
+        )
+    if isinstance(a, list):
+        return isinstance(b, list) and len(a) == len(b) and all(map(_same, a, b))
+    if isinstance(a, float) and a != a:
+        return isinstance(b, float) and b != b
+    return type(a) is type(b) and a == b
+
+
+def _recording_writes(monkeypatch) -> list:
+    """Record every ``_write_snapshot_files`` call's frame schema, table
+    path, written dirs and stats."""
+    calls = []
+    write = st._write_snapshot_files
+
+    def spy(df, path, n_buckets):
+        sid, dirs, stats = write(df, path, n_buckets)
+        calls.append((df.schema, path, sid, dirs, stats))
+        return sid, dirs, stats
+
+    monkeypatch.setattr(st, "_write_snapshot_files", spy)
+    return calls
+
+
+def _zone_table(spark):
+    """~200 rows over 4 buckets whose float columns follow the bucket:
+    NaN-only (bucket 0), NaN with values (1), ±inf with -0.0 and 0.0
+    (2), values with NULLs (3); an all-NULL int, empty and non-ASCII
+    strings, a float32 ``lang_conf``, tinyint, bigint and boolean."""
+    from wallaby2caom2_spark.operators.partitioning import with_bucket
+
+    keys = spark.createDataFrame(
+        [(f"z{n:04d}", n) for n in range(200)], "clip_id string, n int"
+    )
+    b, n = F.col("bucket"), F.col("n")
+    nan, inf = F.lit(float("nan")), F.lit(float("inf"))
+    edges = F.array(inf, -inf, F.lit(-0.0), F.lit(0.0))
+    d = (
+        F.when(b == 0, nan)
+        .when(b == 1, F.when(n % 3 == 0, nan).otherwise(n / 7))
+        .when(b == 2, F.element_at(edges, n % 4 + 1))
+        .otherwise(F.when(n % 5 == 0, F.lit(None)).otherwise(-n / 3))
+    )
+    words = F.array(*[F.lit(w) for w in ("", "é", "日本語", "Zürich", "a")])
+    return with_bucket(keys, 4).select(
+        "clip_id",
+        "n",
+        d.cast("double").alias("d"),
+        d.cast("float").alias("lang_conf"),
+        F.lit(None).cast("int").alias("nulls"),
+        F.element_at(words, (n % 5 + 1).cast("int")).alias("s"),
+        (n % 100 - 50).cast("tinyint").alias("tiny"),
+        (F.lit(2**40) * n).cast("bigint").alias("big"),
+        (n % 2 == 0).alias("flag"),
+    )
+
+
+@pytest.mark.parametrize("row_group_rows", [None, 7], ids=["default", "7_rows"])
+def test_footer_zone_maps_equal_spark_aggregation(
+    spark, tmp_path, monkeypatch, row_group_rows
+):
+    """After every commit path — create, COW merge (widening), MOR merge,
+    compact, rebucket — each written bucket dir's footer zone map equals
+    the Spark aggregation over the same files, with no column unstated.
+    With 7-row row groups the fold across row groups decides the bounds
+    (NaN above every value, ``-0.0`` beside ``0.0``)."""
+    calls = _recording_writes(monkeypatch)
+    if row_group_rows:
+        spark.conf.set("parquet.block.row.count.limit", str(row_group_rows))
+    try:
+        _zone_commits(spark, str(tmp_path / "zone_tbl"))
+    finally:
+        spark.conf.unset("parquet.block.row.count.limit")
+    assert len(calls) == 6
+    groups = []
+    for schema, tbl, sid, dirs, stats in calls:
+        assert dirs and set(stats) == {str(b) for b in dirs}
+        back = (
+            spark.read.schema(schema)
+            .option("basePath", os.path.join(tbl, "data", sid))
+            .parquet(*[os.path.join(tbl, r) for r in dirs.values()])
+        )
+        want = _oracle_stats(back)
+        assert _same(stats, want), (stats, want)
+        assert all(v is not None for e in stats.values() for v in e["cols"].values())
+        groups += [
+            pq.read_metadata(f).num_row_groups
+            for r in dirs.values()
+            for f in glob.glob(os.path.join(tbl, r, "*.parquet"))
+        ]
+    assert max(groups) > 1 if row_group_rows else max(groups) == 1
+
+
+def _zone_commits(spark, path):
+    """Create ``_zone_table``, then a widening COW merge, two MOR merges
+    (NaN and ``-0.0`` updates), a full compact and a rebucket to 8."""
+    df = _zone_table(spark)
+    st.create_table(spark, path, df.drop("bucket"), key="clip_id", n_buckets=4)
+    upd = (
+        df.filter("n % 4 = 0")
+        .withColumn("w", F.col("d") * 2)
+        .withColumn("s", F.concat(F.col("s"), F.lit("ø")))
+        .drop("bucket")
+    )
+    st.merge(spark, path, upd)
+    cur = st.read_table(spark, path).drop("bucket")
+    st.merge(
+        spark, path,
+        cur.filter("n % 4 = 1").withColumn("d", F.lit(float("nan"))),
+        mode="mor",
+    )
+    st.merge(
+        spark, path,
+        cur.filter("n % 4 = 2").withColumn("lang_conf", F.lit(-0.0).cast("float")),
+        mode="mor",
+    )
+    st.compact(spark, path)
+    st.rebucket(spark, path, 8)
+    m = st.read_manifest(path)
+    assert all("w" in e["cols"] for e in m["stats"].values())
+
+
+# -- a column without footer bounds is unstated, and never prunes -----------
+
+
+def test_long_string_is_unstated_and_never_prunes(spark, tmp_path):
+    """parquet-mr writes no statistics for a string column chunk whose
+    min plus max exceed 4 KB. A MOR delta holding such a value outside
+    the base interval leaves the column unstated for its bucket, so a
+    read for the value finds it, and ``IS NULL`` keeps the bucket; a
+    create holding one does the same."""
+    path = str(tmp_path / "long_tbl")
+    st.create_table(
+        spark, path, _df(spark, _rows(40)), key="clip_id", n_buckets=2
+    )
+    long = "zz" + "y" * 5000
+    out = st.merge(spark, path, _df(spark, [("k0003", 3, 3.0, long)]), mode="mor")
+    (touched,) = out["touched_buckets"]
+    m = st.read_manifest(path)
+    assert m["stats"][str(touched)]["cols"]["grp"] is None
+    assert touched in st.prune_buckets(m, f"grp = '{long}'")
+    assert touched in st.prune_buckets(m, "grp IS NULL")
+    assert _assert_where_equals_filter(spark, path, f"grp = '{long}'") == ["k0003"]
+    assert _assert_where_equals_filter(spark, path, "grp > 'grp9'") == ["k0003"]
+    # compaction rewrites the bucket, and it stays unstated
+    st.compact(spark, path)
+    m = st.read_manifest(path)
+    assert m["stats"][str(touched)]["cols"]["grp"] is None
+    assert _assert_where_equals_filter(spark, path, f"grp = '{long}'") == ["k0003"]
+
+    p2 = str(tmp_path / "long_create")
+    st.create_table(
+        spark, p2, _df(spark, [("a", 1, 1.0, long), ("b", 2, 2.0, "g")]),
+        key="clip_id", n_buckets=1,
+    )
+    (entry,) = st.read_manifest(p2)["stats"].values()
+    assert entry["cols"]["grp"] is None and entry["cols"]["v"] == [1, 2, 0]
+    assert _assert_where_equals_filter(spark, p2, f"grp = '{long}'") == ["a"]
+
+
+def test_mor_nan_widens_interval_above_every_value(spark, tmp_path):
+    """NaN sorts above every value in Spark, so ``score > 1000`` matches
+    a NaN row: a MOR delta of NaN must widen the bucket's max to NaN,
+    not leave the base's finite max in place."""
+    path = str(tmp_path / "nan_tbl")
+    st.create_table(
+        spark, path, _df(spark, _rows(40)), key="clip_id", n_buckets=2
+    )
+    out = st.merge(
+        spark, path, _df(spark, [("k0003", 3, float("nan"), "g")]), mode="mor"
+    )
+    (touched,) = out["touched_buckets"]
+    hi = st.read_manifest(path)["stats"][str(touched)]["cols"]["score"][1]
+    assert hi != hi  # NaN
+    assert _assert_where_equals_filter(spark, path, "score > 1000") == ["k0003"]
 
 
 # -- property test: pruning is sound on generated predicate shapes ----------

@@ -90,10 +90,13 @@ import decimal
 import json
 import os
 import re
+import shutil
 import uuid
 from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -187,7 +190,7 @@ def _commit(path: str, manifest: dict, new_version: int, base_version: int) -> N
 
 
 def _write_snapshot_files(
-    df: DataFrame, path: str, n_tasks: int
+    df: DataFrame, path: str, n_buckets: int
 ) -> tuple[str, dict[int, str], dict]:
     """Write ``df`` (must carry ``bucket``) under a fresh snapshot dir,
     one directory per bucket, returning (snapshot_id, {bucket:
@@ -197,38 +200,95 @@ def _write_snapshot_files(
     or deletes emptying a bucket) yields a sparse map; a missing entry
     means an empty bucket (``_read_buckets``).
 
-    ``repartitionByRange`` on the bucket value keeps rewrite
-    parallelism equal to the touched-bucket count (plain hash
-    ``repartition`` can collide distinct bucket values into one task).
+    ``repartitionById`` sends each bucket value to its own partition of
+    ``n_buckets``: every bucket dir gets exactly one file per commit, no
+    two buckets share a task, and no job samples the data to plan it.
 
-    Zone maps are computed by reading BACK the just-written parquet:
-    column pruning means only the atomic statable columns are scanned
-    (the audio payload bytes never leave the footers), so the stats
-    pass costs a slim column scan of the batch, not a second full
-    materialization of the plan. The read takes ``df``'s own schema,
-    known without a job, so no job infers it from the footers."""
+    Zone maps and row counts come from the written files' parquet
+    footers (``_footer_stats``), read on the driver: the commit runs no
+    job to compute them, the way Iceberg's and Delta's writers take file
+    stats from the footer they just wrote."""
     sid = "s" + uuid.uuid4().hex[:12]
     snap_rel = os.path.join("data", sid)
     (
-        df.repartitionByRange(max(n_tasks, 1), F.col("bucket"))
+        df.repartitionById(n_buckets, F.col("bucket"))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(path, snap_rel))
     )
+    statable = [
+        f.name
+        for f in df.schema.fields
+        if f.name not in ("bucket", "_deleted") and _literal_types(f.dataType)
+    ]
     written: dict[int, str] = {}
+    stats: dict = {}
     for name in os.listdir(os.path.join(path, snap_rel)):
         if name.startswith("bucket="):
             b = int(name.split("=", 1)[1])
             written[b] = os.path.join(snap_rel, name)
-    stats: dict = {}
-    if written:
-        back = (
-            df.sparkSession.read.schema(df.schema)
-            .option("basePath", os.path.join(path, snap_rel))
-            .parquet(*[os.path.join(path, r) for r in written.values()])
-        )
-        stats = _bucket_stats(back)
+            stats[str(b)] = _footer_stats(os.path.join(path, written[b]), statable)
     return sid, written, stats
+
+
+def _bound(fold, *values):
+    """``fold`` (``min`` or ``max``) of the non-None ``values`` in Spark's
+    order, where NaN sorts above every other value; None if there are
+    none."""
+    known = [v for v in values if v is not None]
+    return fold(known, key=lambda v: (v != v, v), default=None)
+
+
+def _union_zone(a: list | None, b: list | None) -> list | None:
+    """Union of two column zone maps ``[min, max, null_count]``: a None
+    (unstated) side leaves the column unstated, and an unknown null
+    count stays unknown."""
+    if a is None or b is None:
+        return None
+    return [
+        _bound(min, a[0], b[0]),
+        _bound(max, a[1], b[1]),
+        None if None in (a[2], b[2]) else a[2] + b[2],
+    ]
+
+
+def _footer_stats(bucket_dir: str, statable: list[str]) -> dict:
+    """A bucket dir's zone map ``{"n_rows": n, "cols": {col: [min, max,
+    null_count]}}`` over the ``statable`` columns (``_literal_types``),
+    folded from every row group of every data file's parquet footer
+    (names starting with ``.`` or ``_`` are skipped, as Spark's reader
+    skips them). Min and max fold in Spark's order, NaN highest, so they
+    equal a Spark ``min``/``max`` over the rows; an all-NULL column reads
+    ``[None, None, n]``.
+
+    A column whose footer states no bounds for non-NULL values is
+    recorded as ``None``, unstated: parquet-mr drops every statistic of a
+    binary column chunk whose min plus max exceed 4 KB, and an unknown
+    interval must never prune (``prune_buckets``, ``_merge_stats_union``)."""
+
+    def chunk_zone(chunk, n: int) -> list | None:
+        if chunk is None or not chunk.has_null_count:
+            return None
+        if chunk.has_min_max:
+            return [chunk.min, chunk.max, chunk.null_count]
+        return [None, None, n] if chunk.null_count == n else None
+
+    n_rows = 0
+    cols: dict = {c: [None, None, 0] for c in statable}
+    for name in sorted(os.listdir(bucket_dir)):
+        if name.startswith((".", "_")):
+            continue
+        meta = pq.read_metadata(os.path.join(bucket_dir, name))
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            n_rows += rg.num_rows
+            chunks = {
+                rg.column(i).path_in_schema: rg.column(i).statistics
+                for i in range(rg.num_columns)
+            }
+            for c in statable:
+                cols[c] = _union_zone(cols[c], chunk_zone(chunks.get(c), rg.num_rows))
+    return {"n_rows": n_rows, "cols": cols}
 
 
 # the expression-tree node classes and literal types ``prune_buckets``
@@ -282,59 +342,27 @@ def _literal_types(dtype: T.DataType) -> tuple[str, ...]:
     return next((k for t, k in _COMPARABLE if isinstance(dtype, t)), ())
 
 
-def _bucket_stats(df: DataFrame) -> dict:
-    """Per-bucket zone maps for data skipping: ``{bucket: {"n_rows": n,
-    "cols": {col: [min, max, null_count]}}}`` over every integral,
-    floating, string and boolean column (``_literal_types``) — the
-    manifest-level analog of Iceberg's per-file column stats / Delta's
-    add-action stats. One map-side-combined agg over the batch being
-    written (bounded output: n_buckets rows x statable columns),
-    collected to the driver for the manifest."""
-    statable = [
-        f.name
-        for f in df.schema.fields
-        if f.name not in ("bucket", "_deleted") and _literal_types(f.dataType)
-    ]
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for c in statable:
-        aggs.append(F.min(c).alias(f"_min_{c}"))
-        aggs.append(F.max(c).alias(f"_max_{c}"))
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"_nulls_{c}"))
-    out: dict = {}
-    for r in df.groupBy("bucket").agg(*aggs).collect():
-        out[str(r["bucket"])] = {
-            "n_rows": r["_n"],
-            "cols": {
-                c: [r[f"_min_{c}"], r[f"_max_{c}"], r[f"_nulls_{c}"]]
-                for c in statable
-            },
-        }
-    return out
-
-
 def _merge_stats_union(base: dict | None, delta: dict | None) -> dict:
     """Interval union of two per-bucket stats entries (merge-on-read: a
     bucket's effective zone map is base ∪ pending deltas). Min of mins,
     max of maxes — a SUPERSET of the live rows (tombstoned rows may
     keep the interval wide until compaction recomputes it exactly),
-    which is the safe direction for pruning."""
+    which is the safe direction for pruning. A column unstated (None) on
+    either side stays unstated."""
     if not base:
         return dict(delta or {})
     if not delta:
         return dict(base)
-    cols: dict = {}
-    for c in set(base.get("cols", {})) | set(delta.get("cols", {})):
-        b, d = base.get("cols", {}).get(c), delta.get("cols", {}).get(c)
-        if b is None or d is None:
-            # column statable on one side only (widening): rows on the
-            # other side read NULL for it, which no comparison matches, so
-            # the one-sided interval remains a safe zone map — but its
-            # null count is unknown, and stays so in every later union
-            cols[c] = [*(b or d)[:2], None]
-            continue
-        lo = b[0] if d[0] is None else d[0] if b[0] is None else min(b[0], d[0])
-        hi = b[1] if d[1] is None else d[1] if b[1] is None else max(b[1], d[1])
-        cols[c] = [lo, hi, None if None in (b[2], d[2]) else b[2] + d[2]]
+    base_cols, delta_cols = base.get("cols", {}), delta.get("cols", {})
+    # a column statable on one side only (widening): rows on the other
+    # side read NULL for it, which no comparison matches, so the
+    # one-sided interval remains a safe zone map — but its null count is
+    # unknown, and stays so in every later union
+    widened = [None, None, None]
+    cols = {
+        c: _union_zone(base_cols.get(c, widened), delta_cols.get(c, widened))
+        for c in set(base_cols) | set(delta_cols)
+    }
     return {
         "n_rows": (base.get("n_rows") or 0) + (delta.get("n_rows") or 0),
         "cols": cols,
@@ -345,12 +373,18 @@ def _parse(where: str) -> dict | None:
     """``where`` as the active session's parser reads it — one JVM call
     returns the unresolved tree as a flat pre-order node list — rebuilt
     as nested nodes (``class``, the node's own fields, ``children``);
-    None when it does not parse (the filter then reports the error)."""
+    None when it does not parse. That failure is silent: PySpark logs a
+    SQL error's context at ERROR as it converts the error, so the logger
+    is off for the call, and the filter alone reports the error."""
     parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    was_disabled, logger.disabled = logger.disabled, True
     try:
         nodes = iter(json.loads(parser.parseExpression(where).toJSON()))
     except ParseException:
         return None
+    finally:
+        logger.disabled = was_disabled
 
     def tree() -> dict:
         node = next(nodes)
@@ -473,7 +507,7 @@ def prune_buckets(manifest: dict, where: str) -> list[int] | None:
     def kept(b: str) -> bool:
         cols = stats.get(b, {}).get("cols", {})
         return all(int(b) in s for s in key_sets) and not any(
-            c in cols and _excludes(cols[c], op, values)
+            cols.get(c) is not None and _excludes(cols[c], op, values)
             for c, op, values in zone
         )
 
@@ -527,8 +561,7 @@ def _commit_rewrite(
     bucket carries forward untouched; a rewritten bucket left empty (its
     rows all deleted) drops out of the manifest. Returns the new version
     and the {bucket: dir} written."""
-    n_tasks = base["n_buckets"] if rewritten is None else len(rewritten)
-    _sid, dirs, stats = _write_snapshot_files(df, path, n_tasks)
+    _sid, dirs, stats = _write_snapshot_files(df, path, base["n_buckets"])
     gone = None if rewritten is None else {str(b) for b in rewritten}
 
     def carried(entries: dict | None) -> dict:
@@ -887,9 +920,17 @@ def _merge_mor(path: str, base: dict, batch: DataFrame, schema: str) -> dict:
     groups and append them to the manifest's delta lists — no base read,
     no bucket rewrite, O(batch) I/O end-to-end. A tombstone for a key
     the table never held resolves to nothing at read time — the same
-    unmatched-delete-is-a-no-op rule as the COW arm."""
-    n_rows = batch.count()
-    if n_rows == 0:
+    unmatched-delete-is-a-no-op rule as the COW arm.
+
+    The batch is written first and counted from the written footers, so
+    no job counts it. An empty batch writes no bucket dir: its empty
+    snapshot dir is removed and the table stays at its version."""
+    new_version = base["version"] + 1
+    sid, new_dirs, delta_stats = _write_snapshot_files(
+        batch, path, base["n_buckets"]
+    )
+    if not new_dirs:
+        shutil.rmtree(os.path.join(path, "data", sid))
         return {
             "version": base["version"],
             "base_version": base["version"],
@@ -897,10 +938,6 @@ def _merge_mor(path: str, base: dict, batch: DataFrame, schema: str) -> dict:
             "delta_rows": 0,
             "mode": "mor",
         }
-    new_version = base["version"] + 1
-    _sid, new_dirs, delta_stats = _write_snapshot_files(
-        batch, path, base["n_buckets"]
-    )
     deltas = {b: list(lst) for b, lst in base.get("deltas", {}).items()}
     for b, rel in new_dirs.items():
         deltas.setdefault(str(b), []).append([new_version, rel])
@@ -931,7 +968,7 @@ def _merge_mor(path: str, base: dict, batch: DataFrame, schema: str) -> dict:
         "version": new_version,
         "base_version": base["version"],
         "touched_buckets": sorted(new_dirs),
-        "delta_rows": n_rows,
+        "delta_rows": sum(st["n_rows"] for st in delta_stats.values()),
         "mode": "mor",
     }
 
@@ -991,11 +1028,12 @@ def compact(
 def rebucket(spark: SparkSession, path: str, new_n_buckets: int) -> dict:
     """Partition-spec evolution: change the table's bucket count with
     ONE atomic full-rewrite commit — the whole table (pending MOR
-    deltas resolved) is re-hashed under the new spec, stats and zone
-    maps recomputed, and the new manifest committed with the same
-    put-if-absent protocol (a concurrent merge loses cleanly or wins
-    cleanly; never a torn spec). Time travel still reads old versions
-    under their OWN ``n_buckets`` — every manifest is self-describing.
+    deltas resolved) is re-hashed under the new spec, its zone maps
+    read from the new files' footers, and the new manifest committed
+    with the same put-if-absent protocol (a concurrent merge loses
+    cleanly or wins cleanly; never a torn spec). Time travel still reads
+    old versions under their OWN ``n_buckets`` — every manifest is
+    self-describing.
 
     Scale note: a full rewrite is the honest cost of re-hashing —
     unlike Iceberg's lazy spec evolution there is no mixed-spec state
@@ -1003,9 +1041,8 @@ def rebucket(spark: SparkSession, path: str, new_n_buckets: int) -> dict:
     xxhash64 pmod identity (``hash % 2N ∈ {b, b+N}`` whenever
     ``hash % N == b``) keeps every task's input confined to one old
     bucket, so the rewrite shuffles nothing across old bucket
-    boundaries; ``repartitionByRange`` on the new bucket value keeps
-    task parallelism = new bucket count. Run it as maintenance, like
-    ``compact``."""
+    boundaries; ``repartitionById`` on the new bucket value gives each
+    new bucket its own task. Run it as maintenance, like ``compact``."""
     if new_n_buckets < 1:
         raise ValueError("new_n_buckets must be >= 1")
     base = read_manifest(path)
@@ -1036,8 +1073,6 @@ def expire_snapshots(path: str, keep_last: int = 2) -> dict:
 
     Driver-side filesystem work only — bounded by snapshot-history
     length x bucket count, no Spark job."""
-    import shutil
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     # from the versions actually retained, not range(cur, ...): earlier

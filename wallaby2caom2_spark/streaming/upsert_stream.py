@@ -64,10 +64,11 @@ def upsert_batch(
     streaming sink and direct batch callers (tests)."""
     result = quality_filter(batch_df, cfg, repartition=False)
     if not snapshot_table.is_snapshot_table(table_path):
-        snapshot_table.create_table(
+        manifest = snapshot_table.create_table(
             spark, table_path, result, key="clip_id", n_buckets=n_buckets
         )
-        n = snapshot_table.read_table(spark, table_path).count()
+        # exact: create_table deduplicated, and version 0 has no deltas
+        n = sum(s["n_rows"] for s in manifest["stats"].values())
         return {
             "version": 0,
             "base_version": -1,
