@@ -31,7 +31,6 @@ from wallaby2caom2_spark.queries.clips_flagship import clips_path_for  # noqa: E
 from wallaby2caom2_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 
 # Headline suite: the flagship clips pipeline + one representative query per
@@ -77,7 +76,8 @@ def main() -> None:
     n_clips = None
     probe_before = host_probe()
 
-    spark = get_spark("bench", cpus=CPUS)
+    spark = get_spark("bench")
+    parallelism = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     times: dict[str, float] = {}
@@ -121,14 +121,14 @@ def main() -> None:
                 "sf": sf_val,
                 "clips_per_sec": round(n_clips / clips_sec, 1),
                 "n_clips": n_clips,
-                "parallelism": CPUS,
+                "parallelism": parallelism,
                 "runs_per_query": N_RUNS,
                 "extra_samples": extra_samples,
                 # host-weather self-adjudication (bench_common.host_probe):
                 # the BEFORE probe is the contention signal — high loadavg
                 # with the guest otherwise idle = external contention
                 # (loadavg is a 1-min EWMA, so the AFTER probe mostly
-                # reflects the bench's own 32-thread work; read its
+                # reflects the bench's own work; read its
                 # spin_mips for execution-speed drift, not its loadavg)
                 "host_probe_before": probe_before,
                 "host_probe_after": host_probe(),

@@ -1,15 +1,14 @@
 """Two-cluster-size scaling evidence at EXECUTOR granularity.
 
-bench_scaling.py proxies N-vs-4N with local[8]/local[32] thread counts in
-one JVM. This variant runs the literal north-rule topology inside the
-sandbox: ``local-cluster[N, cores, mem]`` — N separate executor JVM
-processes registered with a standalone-style backend, netty shuffle
-between them, one python-UDF worker pool per executor — at N vs 4N
-executor counts (default 2 vs 8, x2 cores each; BENCH_CLUSTER_LEVELS /
-BENCH_CLUSTER_CORES select other shapes), same input, same job.
+Runs the literal north-rule topology inside one host:
+``local-cluster[N, cores, mem]`` — N separate executor JVM processes
+registered with a standalone-style backend, netty shuffle between them,
+one python-UDF worker pool per executor — at N vs 4N executor counts
+(default 2 vs 8, x2 cores each; BENCH_CLUSTER_LEVELS / BENCH_CLUSTER_CORES
+select other shapes), same input, same job.
 
-Same measurement protocol as bench_scaling.py (this VM has bursty
-hypervisor throttling, so medians measure the weather):
+Measurement protocol (a host with bursty hypervisor throttling makes
+medians measure the weather):
 
 - each (level, round) runs in a fresh subprocess tree, taskset-pinned to
   ``N*C + 2`` upper cores; inside the child the roles are re-pinned —
@@ -56,9 +55,10 @@ EXEC_MEM_MB = int(os.environ.get("BENCH_CLUSTER_MEM_MB", "4096"))
 ROUNDS = int(os.environ.get("BENCH_ROUNDS", "3"))
 RUNS_PER_ROUND = int(os.environ.get("BENCH_RUNS", "2"))
 
-# Reuse bench_scaling.py's 2M text-heavy corpus, reading a deterministic
-# prefix of its part files: 800k clips keeps the 4-core level under ~1 min
-# per sample while still ~40 s of pure pipeline work per run.
+# A 2M-clip text-heavy corpus (per-row CPU in langid/ppl/scrub dominates
+# fixed overheads), read as a deterministic prefix of its part files: 800k
+# clips keeps the 4-core level under ~1 min per sample while still ~40 s of
+# pure pipeline work per run.
 SCALE_N = int(os.environ.get("BENCH_SCALE_N", "2000000"))
 SUBSET_FILES = int(os.environ.get("BENCH_CLUSTER_FILES", "64"))
 ROWS_PER_FILE = 12_500
@@ -66,13 +66,19 @@ SCALE_CORPUS = f"/tmp/wallaby_clips_cache/scaling-text_heavy-v4-n{SCALE_N}"
 
 
 def _ensure_corpus() -> str:
-    if not os.path.exists(os.path.join(SCALE_CORPUS, "_SUCCESS_GEN")):
-        # delegate generation (private tmpdir + atomic rename) to the
-        # sibling bench so both benches share one corpus
-        import bench_scaling
+    from wallaby2caom2_spark import datagen
 
-        bench_scaling._ensure_corpus()
-    return SCALE_CORPUS
+    return datagen.generate_once(
+        SCALE_CORPUS,
+        lambda tmp: datagen.write_clips_parquet(
+            tmp,
+            SCALE_N,
+            seed=42,
+            rows_per_file=ROWS_PER_FILE,
+            profile="text_heavy",
+            workers=os.cpu_count() or 1,
+        ),
+    )
 
 
 def _subset_paths() -> list[str]:

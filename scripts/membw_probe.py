@@ -62,7 +62,7 @@ def main() -> None:
         return
     rounds = int(os.environ.get("MEMBW_ROUNDS", "3"))
     # interleave levels across rounds and keep the BEST aggregate per level
-    # (same least-hypervisor-interference protocol as bench_scaling.py)
+    # (the least-hypervisor-interference protocol of bench_scaling_cluster.py)
     best: dict[int, float] = {k: 0.0 for k in LEVELS}
     for r in range(rounds):
         for k in LEVELS:

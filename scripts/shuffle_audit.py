@@ -33,7 +33,6 @@ from wallaby2caom2_spark.queries.clips_flagship import (  # noqa: E402
 from wallaby2caom2_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # name → callable(spark) returning a DataFrame to drain. The funnel is the
 # whole curation DAG (filter → gate signals → LSH dedup → split); the
@@ -52,7 +51,8 @@ def _jobs(spark):
 
 
 def main() -> None:
-    spark = get_spark(cpus=CPUS)
+    spark = get_spark()
+    parallelism = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     clips = load_clips(spark, SF_DIR)
     payload = clips.agg(F.sum(F.length("bytes")).alias("b")).collect()[0][
@@ -80,6 +80,7 @@ def main() -> None:
         "sf_dir": SF_DIR,
         "n_clips": n_clips,
         "payload_bytes": payload,
+        "parallelism": parallelism,
         "jobs": results,
     }
     print(json.dumps(line))
@@ -90,7 +91,7 @@ def main() -> None:
         "# Measured shuffle/spill audit (observe.py)",
         "",
         f"Input: `{SF_DIR}`, {n_clips:,} clips, "
-        f"{payload / 1e9:.2f} GB payload, local[{CPUS}].",
+        f"{payload / 1e9:.2f} GB payload, local[{parallelism}].",
         "Source: Spark task metrics via the driver's `AppStatusStore` "
         "(`StageMetricsAudit`), totalled over each job's stages.",
         "",

@@ -14,7 +14,7 @@ _SPARK = pytest.StashKey[dict]()
 def _new_session():
     from wallaby2caom2_spark.session import get_spark
 
-    s = get_spark(app_name="w2c2s-tests", shuffle_partitions=8)
+    s = get_spark(app_name="w2c2s-tests")
     s.sparkContext.setLogLevel("ERROR")
     return s
 

@@ -29,6 +29,12 @@ def test_driver_mem_env_override_wins(monkeypatch):
     assert 1024 <= mb <= 12 * 1024
 
 
+def test_shuffle_width_is_twice_the_cores(spark):
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+        2 * spark.sparkContext.defaultParallelism
+    )
+
+
 def test_local_frame_plans_in_the_jvm(spark):
     """Driver-built frames scan a local relation: no Python RDD
     (``Scan ExistingRDD``), so no action on them starts a Python worker."""

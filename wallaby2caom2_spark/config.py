@@ -69,9 +69,6 @@ class PipelineConfig:
     thresholds: RuleThresholds = field(default_factory=RuleThresholds)
     supported_codecs: tuple[str, ...] = SUPPORTED_CODECS
     allowed_langs: tuple[str, ...] = ALLOWED_LANGS
-    # partitioning / skew (north rule: explicit salted repartition on clip_id)
-    shuffle_partitions: int = 32
-    salt_buckets: int = 64
     # Arrow batch sizing — ~13MB of `bytes` per batch at typical clip sizes.
     # 256 ALIGNS with spark.sql.parquet.columnarReaderBatchSize (session.py):
     # the JVM→Arrow writer then flushes exactly one columnar scan batch per

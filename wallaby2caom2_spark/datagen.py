@@ -17,6 +17,8 @@ of chunking or generation order.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -459,4 +461,34 @@ def write_clips_parquet(
     else:
         for job in jobs:
             _write_chunk(job)
+    return path
+
+
+def generate_once(path: str, write: Callable[[str], object]) -> str:
+    """``path``, filled by ``write`` once and then reused: the one cache
+    protocol for generated datasets.
+
+    A dataset is complete when its ``_SUCCESS_GEN`` marker exists, and then
+    ``write`` is not called. Otherwise ``write(tmp)`` fills a process-private
+    ``<path>.gen-<pid>`` directory, the marker is written into it, and the
+    directory is renamed to ``path``, so a concurrent reader never scans a
+    half-written file. A process that loses the rename race discards its
+    copy; the generators are seed-pinned, so the winner's bytes are the
+    same. If ``write`` raises, the private directory is removed and nothing
+    appears at ``path``."""
+    marker = "_SUCCESS_GEN"
+    if os.path.exists(os.path.join(path, marker)):
+        return path
+    tmp = f"{path}.gen-{os.getpid()}"
+    os.makedirs(tmp, exist_ok=True)
+    try:
+        write(tmp)
+        with open(os.path.join(tmp, marker), "w") as fh:
+            fh.write("ok")
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            pass  # another process won the race with an identical copy
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path

@@ -17,20 +17,20 @@ Bit-compatibility is exact, not approximate: the pipeline's UDFs and this
 builder call the same functions on the same bytes, so even raw doubles
 (ppl, rms) hash identically (verified per field in tests/test_fixtures.py).
 
-Generation parallelizes over part files with a process pool; the output is
-written to a temp dir and atomically renamed (same concurrency contract as
-the clips cache).
+Generation parallelizes over part files with a process pool and is cached
+through ``datagen.generate_once``, like the clips cache.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from .datagen import generate_once
 
 FIXTURE_SCHEMA = pa.schema(
     [
@@ -651,29 +651,21 @@ def build_features_fixture(
     clips_path: str, out_path: str, workers: int = 8
 ) -> str:
     """Generate the fixture table for every part file of ``clips_path``
-    into ``out_path`` (atomic rename, losers discard)."""
-    marker = os.path.join(out_path, "_SUCCESS_GEN")
-    if os.path.exists(marker):
-        return out_path
-    parts = sorted(glob.glob(os.path.join(clips_path, "*.parquet")))
-    tmp = f"{out_path}.gen-{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    jobs = [
-        (part, os.path.join(tmp, f"part-{i:05d}.parquet"))
-        for i, part in enumerate(parts)
-    ]
-    if workers > 1 and len(jobs) > 1:
-        from concurrent.futures import ProcessPoolExecutor
+    into ``out_path`` once (``datagen.generate_once``)."""
 
-        with ProcessPoolExecutor(max_workers=workers) as pool:
-            list(pool.map(_fixture_chunk, jobs))
-    else:
-        for job in jobs:
-            _fixture_chunk(job)
-    with open(os.path.join(tmp, "_SUCCESS_GEN"), "w") as fh:
-        fh.write("ok")
-    try:
-        os.rename(tmp, out_path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out_path
+    def write(tmp: str) -> None:
+        parts = sorted(glob.glob(os.path.join(clips_path, "*.parquet")))
+        jobs = [
+            (part, os.path.join(tmp, f"part-{i:05d}.parquet"))
+            for i, part in enumerate(parts)
+        ]
+        if workers > 1 and len(jobs) > 1:
+            from concurrent.futures import ProcessPoolExecutor
+
+            with ProcessPoolExecutor(max_workers=workers) as pool:
+                list(pool.map(_fixture_chunk, jobs))
+        else:
+            for job in jobs:
+                _fixture_chunk(job)
+
+    return generate_once(out_path, write)

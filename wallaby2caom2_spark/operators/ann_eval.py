@@ -8,8 +8,8 @@ how much recall nprobe buys, and what fraction of the corpus each probe
 touches. This module provides the measured answer: a deterministic
 cluster-structured vector generator, an exact distributed top-k (the
 ground truth), a sample-trained IVF coarse quantizer, and a probed search
-whose scanned-candidate count is part of the result. scripts/bench_ann.py
-records the curve; tests/test_ann_eval.py pins the harness's semantics
+whose scanned-candidate count is part of the result. BENCH/ann-recall.md
+records the curve at 1M vectors; tests/test_ann_eval.py pins the semantics
 (full probing == brute force exactly; recall monotone in nprobe).
 
 Scale shapes: both searches are ``mapInArrow`` passes (embeddings decoded

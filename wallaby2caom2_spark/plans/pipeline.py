@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators import cascade, fused_stage, partitioning
+from ..session import exchange_partitions
 
 RESULT_COLUMNS = [
     "clip_id",
@@ -48,7 +49,6 @@ RESULT_COLUMNS = [
 def quality_filter(
     clips: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
     repartition: bool = True,
 ) -> DataFrame:
     """clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript) → result rows.
@@ -65,14 +65,15 @@ def quality_filter(
         *RESULT_COLUMNS
     )
     if repartition:
-        n = num_partitions or clips.sparkSession.sparkContext.defaultParallelism * 2
         # the exchange balances output rows for the sink regardless of key
         # skew / input layout; content-derived salt columns keep routing
         # deterministic across stage retries while splitting hot clip_ids
         # (ppl/rms/dur are content hashes in effect; scrubbed text covers
         # kept rows)
         df = partitioning.salted_repartition(
-            df, n, content_cols=("scrubbed_transcript", "ppl", "rms", "dur_ms_meas")
+            df,
+            exchange_partitions(clips.sparkSession),
+            content_cols=("scrubbed_transcript", "ppl", "rms", "dur_ms_meas"),
         )
     return df
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators import fused_stage, partitioning
+from ..session import exchange_partitions
 
 FEATURES_VIEW = "clip_features"
 
@@ -120,7 +121,6 @@ def quality_filter_sql(
     spark: SparkSession,
     clips: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
     repartition: bool = True,
     view: str = FEATURES_VIEW,
 ) -> DataFrame:
@@ -128,12 +128,11 @@ def quality_filter_sql(
     (the one non-SQL-expressible step) → temp view → cascade as
     ``spark.sql`` → the same salted exchange of slim result rows. Same
     rows, same plan shape as plans.pipeline.quality_filter (pinned)."""
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
     fused_stage.with_fused_features(clips).createOrReplaceTempView(view)
     df = spark.sql(cascade_sql(cfg, view=view))
     if repartition:
         df = partitioning.salted_repartition(
-            df, n,
+            df, exchange_partitions(spark),
             content_cols=("scrubbed_transcript", "ppl", "rms", "dur_ms_meas"),
         )
     return df

@@ -60,30 +60,17 @@ _N_BY_SF = {"sf0.001": 2000, "sf0.01": 5000, "sf0.1": 100000}
 
 
 def clips_path_for(sf_dir: str) -> str:
-    """Deterministic per-sf clips parquet, generated once and cached.
-
-    Concurrency-safe: generation happens in a process-private temp dir
-    that is atomically renamed into place — two concurrent callers (e.g.
-    bench + oracle gate) can no longer interleave a scan with a
-    half-rewritten part file. The loser of the rename race discards its
-    copy; bytes are identical either way (seed-pinned generator)."""
+    """Deterministic per-sf clips parquet, generated once and cached
+    (``datagen.generate_once``: two concurrent callers, e.g. bench + oracle
+    gate, never interleave a scan with a half-written part file)."""
     name = os.path.basename(os.path.normpath(sf_dir)) or "default"
     n = _N_BY_SF.get(name, 2000)
-    path = os.path.join(_CACHE_ROOT, f"{name}-{_GEN_VERSION}-n{n}")
-    marker = os.path.join(path, "_SUCCESS_GEN")
-    if not os.path.exists(marker):
-        tmp = f"{path}.gen-{os.getpid()}"
-        datagen.write_clips_parquet(tmp, n, seed=42, rows_per_file=1250)
-        with open(os.path.join(tmp, "_SUCCESS_GEN"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # another process won the race with an identical copy
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    return datagen.generate_once(
+        os.path.join(_CACHE_ROOT, f"{name}-{_GEN_VERSION}-n{n}"),
+        lambda tmp: datagen.write_clips_parquet(
+            tmp, n, seed=42, rows_per_file=1250
+        ),
+    )
 
 
 def load_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,25 +88,13 @@ _MEDIA_VERSION = "v5"
 def media_path_for(sf_dir: str) -> str:
     """Deterministic image-mix side table (real PNGs, real JPEG headers in
     two marker layouts plus a corrupt one, raw and empty payloads —
-    datagen.generate_media_rows) cached next to the clips cache with the
-    same atomic-rename concurrency contract."""
+    datagen.generate_media_rows) cached next to the clips cache through
+    ``datagen.generate_once``."""
     name = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    path = os.path.join(
-        _CACHE_ROOT, f"{name}-media-{_MEDIA_VERSION}-n{_MEDIA_N}"
+    return datagen.generate_once(
+        os.path.join(_CACHE_ROOT, f"{name}-media-{_MEDIA_VERSION}-n{_MEDIA_N}"),
+        lambda tmp: datagen.write_media_parquet(tmp, _MEDIA_N, seed=42),
     )
-    marker = os.path.join(path, "_SUCCESS_GEN")
-    if not os.path.exists(marker):
-        tmp = f"{path}.gen-{os.getpid()}"
-        datagen.write_media_parquet(tmp, _MEDIA_N, seed=42)
-        with open(os.path.join(tmp, "_SUCCESS_GEN"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
 
 
 _VIDEO_N = 200  # branch-coverage side table, like the image mix
@@ -129,25 +104,13 @@ _VIDEO_VERSION = "v1"  # v1: RVID raw container, closed-form frame pixels
 def video_path_for(sf_dir: str) -> str:
     """Deterministic raw-video side table (datagen.generate_video_rows —
     'RVID' containers with closed-form frame pixels plus truncated /
-    zero-geometry / empty branches) cached next to the clips cache with
-    the same atomic-rename concurrency contract."""
+    zero-geometry / empty branches) cached next to the clips cache through
+    ``datagen.generate_once``."""
     name = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    path = os.path.join(
-        _CACHE_ROOT, f"{name}-video-{_VIDEO_VERSION}-n{_VIDEO_N}"
+    return datagen.generate_once(
+        os.path.join(_CACHE_ROOT, f"{name}-video-{_VIDEO_VERSION}-n{_VIDEO_N}"),
+        lambda tmp: datagen.write_video_parquet(tmp, _VIDEO_N, seed=42),
     )
-    marker = os.path.join(path, "_SUCCESS_GEN")
-    if not os.path.exists(marker):
-        tmp = f"{path}.gen-{os.getpid()}"
-        datagen.write_video_parquet(tmp, _VIDEO_N, seed=42)
-        with open(os.path.join(tmp, "_SUCCESS_GEN"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
 
 
 _FEATURES_VERSION = "v16"  # v16: + declip-repair replay columns (dcl_*, shared clip_declip); v15: + spectral-flux onset replay columns (on_*, shared clip_onset); v14: + waveform-health (wh_*, shared clip_health) and canonical-transcode (tc_*, shared clip_transcode) replay columns; v13: + syllable-rate (syl_*, shared clip_syllable) and transcript-compressibility (z_*, shared transcript_compression) replay columns; v12: + gated-loudness replay columns (loud_*, shared clip_loudness); v11: + reverb-gate (rev_*, shared clip_reverb) and mains-hum (hum_*, shared clip_hum) replay columns; v10: + bandwidth-gate replay columns (bw_ok/rolloff95/rolloff99/ratio/suspect, shared clip_bandwidth); v9: + F0-tracker replay columns (pitch_ok/n_frames/n_voiced/voiced_ratio/mean_f0, shared clip_pitch); v8: + MFCC replay columns (mfcc_ok/n_frames/len/c0-c2, shared clip_mfcc); v7b: semantic-embedding replay columns (emb_ok, emb; zero-vector containment); v6: + resample/specaugment replay columns; v5: + spectrogram-preview columns; v4: + segment/normalize/features/trim/spectral/augment replay columns; v3: pow2-padded fingerprint FFT; v2: + labeler columns, n_chars, fingerprint, preview

@@ -391,7 +391,7 @@ def _bpe_learn(docs: DataFrame) -> tuple[DataFrame, F.Column]:
     # plan still references this cache, so it cannot be unpersisted here;
     # it stays pinned for the session (LRU-evictable). Timing harnesses
     # must spark.catalog.clearCache() between samples or they measure a
-    # warm-cache replay via CacheManager plan-dedupe (bench_corpus.py does).
+    # warm-cache replay via CacheManager plan-dedupe (bench.py does).
     vocab = vocab.persist()
     seq = F.col("seq")
     for _ in range(BPE_MERGES):

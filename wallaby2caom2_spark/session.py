@@ -3,7 +3,8 @@
 Local-mode defaults sized from the host (local[$SPARK_GRAFT_CPUS], a driver
 heap from MemAvailable unless $SPARK_GRAFT_DRIVER_MEM overrides it); on a
 real cluster the same builder options apply, only master/memory change
-(launched via ``spark-submit --py-files``).
+(launched via ``spark-submit --py-files``). Shuffle partitions follow the
+cores the session runs on, in both cases.
 """
 
 from __future__ import annotations
@@ -51,10 +52,18 @@ def default_driver_mem() -> str:
     return driver_mem_for(avail_kb)
 
 
+def exchange_partitions(spark: SparkSession) -> int:
+    """Partitions for a shuffle: twice the cores the session can run tasks
+    on (``defaultParallelism`` — under a cluster master, the executor cores
+    registered so far), so every core has two tasks to balance skew with.
+    ``get_spark`` sets it as ``spark.sql.shuffle.partitions``, and the
+    pipeline's salted exchange uses it directly."""
+    return 2 * spark.sparkContext.defaultParallelism
+
+
 def get_spark(
     app_name: str = "wallaby2caom2_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     # Under spark-submit the JVM gateway is already running with the
     # submitted --master (local-cluster / standalone / yarn / k8s); the
@@ -66,7 +75,6 @@ def get_spark(
         master = f"local[{cpus_env}]" if cpus_env else "local[*]"
     else:
         master = f"local[{cpus}]"
-    shuffle = shuffle_partitions or DEFAULT_CONFIG.shuffle_partitions
     driver_mem = default_driver_mem()
     # Shuffle spill dir: tmpfs by default. On a real cluster each executor
     # shuffles to its own local NVMe (scales with nodes); in this single-VM
@@ -77,10 +85,9 @@ def get_spark(
         SparkSession.builder if submitted
         else SparkSession.builder.master(master)
     )
-    return (
+    spark = (
         builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -128,6 +135,12 @@ def get_spark(
         )
         .getOrCreate()
     )
+    # set on the live session: the core count is known only once the
+    # context runs, and under spark-submit it comes from the submitted master
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(exchange_partitions(spark))
+    )
+    return spark
 
 
 def executor_jvm_count(spark: SparkSession) -> int | None:
