@@ -51,6 +51,7 @@ if len(LEVELS) != 2:
         f"(N,4N), got {LEVELS!r}"
     )
 CORES_PER_EXEC = int(os.environ.get("BENCH_CLUSTER_CORES", "2"))
+DRIVER_CORES = 2  # the driver JVM + python driver's spare cores
 EXEC_MEM_MB = int(os.environ.get("BENCH_CLUSTER_MEM_MB", "4096"))
 ROUNDS = int(os.environ.get("BENCH_ROUNDS", "3"))
 RUNS_PER_ROUND = int(os.environ.get("BENCH_RUNS", "2"))
@@ -63,6 +64,15 @@ SCALE_N = int(os.environ.get("BENCH_SCALE_N", "2000000"))
 SUBSET_FILES = int(os.environ.get("BENCH_CLUSTER_FILES", "64"))
 ROWS_PER_FILE = 12_500
 SCALE_CORPUS = f"/tmp/wallaby_clips_cache/scaling-text_heavy-v4-n{SCALE_N}"
+
+
+def core_budget(usable: set[int] | None = None) -> tuple[int, list[int]]:
+    """(cores the largest level needs: its executors' plus the driver's,
+    the usable cores, sorted — ``os.sched_getaffinity(0)`` by default).
+    Each level's taskset mask is the top of that usable list."""
+    if usable is None:
+        usable = os.sched_getaffinity(0)
+    return max(LEVELS) * CORES_PER_EXEC + DRIVER_CORES, sorted(usable)
 
 
 def _ensure_corpus() -> str:
@@ -235,17 +245,24 @@ def main() -> None:
         _measure_child(int(sys.argv[2]))
         return
 
+    budget, usable = core_budget()
+    if budget > len(usable):
+        raise SystemExit(
+            f"the {max(LEVELS)}-executor level needs {budget} cores "
+            f"({max(LEVELS)} x {CORES_PER_EXEC} + {DRIVER_CORES} for the "
+            f"driver), but only {len(usable)} are usable here"
+        )
     _ensure_corpus()
     all_samples: dict[int, list[float]] = {lvl: [] for lvl in LEVELS}
     execs_seen: dict[int, int] = {}
     n_clips = 0
-    ncpu = os.cpu_count() or 32
     for rnd in range(ROUNDS):
         for lvl in LEVELS:
-            width = lvl * CORES_PER_EXEC + 2
+            width = lvl * CORES_PER_EXEC + DRIVER_CORES
+            mask = ",".join(str(c) for c in usable[-width:])
             proc = subprocess.run(
                 [
-                    "taskset", "-c", f"{ncpu - width}-{ncpu - 1}",
+                    "taskset", "-c", mask,
                     sys.executable, os.path.abspath(__file__),
                     "--measure", str(lvl),
                 ],

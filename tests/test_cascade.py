@@ -1,13 +1,34 @@
 """Rule-cascade unit tests: pure column-expression logic fed literal feature
 rows with literal expected outputs (test_storage_name.py style) — no UDFs,
-so these run in milliseconds and pin the cascade order of config.RULE_ORDER."""
+so these run in milliseconds and pin the cascade order of RULE_ORDER."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from wallaby2caom2_spark.config import DEFAULT_CONFIG, RULE_ORDER
+from wallaby2caom2_spark.config import DEFAULT_CONFIG
 from wallaby2caom2_spark.operators import cascade
+from wallaby2caom2_spark.plans import sql_api
+
+# Cascade rule names, in evaluation order. First match wins; the name is the
+# ``drop_reason``. Order is part of the contract.
+RULE_ORDER = (
+    "codec_invalid",
+    "decode_failed",
+    "sr_mismatch",
+    "duration_mismatch",
+    "audio_silence",
+    "audio_clipping",
+    "audio_dropout",
+    "too_short",
+    "too_long",
+    "repetition",
+    "perplexity_high",
+    "lang_not_allowed",
+    "langid_low_conf",
+)
 
 GOOD = dict(
     codec="wav",
@@ -69,6 +90,9 @@ def test_cascade_literal_cases(spark, patch, expected):
 def test_every_rule_in_order_covered():
     tested = {e for _, e in CASES if e}
     assert tested == set(RULE_ORDER)
+    # the SQL spelling of the cascade lists the rules in the same order
+    sql_order = re.findall(r"THEN '(\w+)'", sql_api.cascade_sql())
+    assert tuple(sql_order) == RULE_ORDER
 
 
 def test_transcript_stats_match_python_str_split(spark):

@@ -49,15 +49,12 @@ def test_filters_actually_change_the_stream():
 
 def test_gray_filter0_matches_preview_encoder():
     """encode_png(img) with default filters is byte-identical to the
-    preview sink's entry point (which delegates here) — and the preview
-    module's minimal filter-0 decoder still reads the dialect, pinning
-    that the delegation did not change the bytes on disk."""
-    from wallaby2caom2_spark.functions.preview import decode_png_gray
-
+    preview sink's entry point (which delegates here), pinning that the
+    delegation did not change the bytes on disk."""
     img = _img((16, 16), seed=9)
     payload = encode_png_gray(img)
     assert payload == encode_png(img)
-    assert (decode_png_gray(payload) == img).all()
+    assert (decode_png(payload) == img).all()
 
 
 def test_corruption_and_unsupported_are_contained():

@@ -7,12 +7,12 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from wallaby2caom2_spark.functions.png import decode_png
 from wallaby2caom2_spark.functions.preview import (
     SPEC_H,
     SPEC_W,
     THUMB_H,
     THUMB_W,
-    decode_png_gray,
     encode_png_gray,
     spectrogram_image,
     spectrogram_thumbnail,
@@ -27,7 +27,7 @@ def test_png_roundtrip():
     img = rng.integers(0, 256, size=(17, 41), dtype=np.uint8)
     data = encode_png_gray(img)
     assert data.startswith(b"\x89PNG")
-    back = decode_png_gray(data)
+    back = decode_png(data)
     assert (back == img).all()
 
 
@@ -47,7 +47,7 @@ def test_thumbnail_deterministic_and_shaped():
     a = waveform_thumbnail(samples)
     b = waveform_thumbnail(samples)
     assert a == b  # byte-identical
-    img = decode_png_gray(a)
+    img = decode_png(a)
     assert img.shape == (THUMB_H, THUMB_W)
     # waveform is white-on-black and symmetric around the midline
     assert set(np.unique(img)) <= {0, 255}
@@ -66,7 +66,7 @@ def test_with_previews_stage(spark, clips_df, oracle_labels):
     for cid, r in rows.items():
         assert r["prev_ok"] == ok_by_oracle[cid]
         if r["prev_ok"]:
-            img = decode_png_gray(bytes(r["thumb_png"]))
+            img = decode_png(bytes(r["thumb_png"]))
             assert img.shape == (r["thumb_h"], r["thumb_w"])
             assert r["thumb_name"] == f"{cid}_prev_{THUMB_W}.png"
         else:
@@ -116,7 +116,7 @@ def test_with_spectrograms_stage(spark, clips_df, oracle_labels):
     for cid, r in rows.items():
         assert r["sgram_ok"] == ok_by_oracle[cid]
         if r["sgram_ok"]:
-            img = decode_png_gray(bytes(r["sgram_png"]))
+            img = decode_png(bytes(r["sgram_png"]))
             assert img.shape == (r["sgram_h"], r["sgram_w"])
             assert r["sgram_name"] == f"{cid}_spec_{SPEC_W}.png"
         else:

@@ -1,6 +1,6 @@
 """SQL-entry-path parity for the flagship cascade (round-3 verdict #7).
 
-The cascade + scrub mask + metrics re-expressed as ``spark.sql`` over a
+The cascade + scrub mask re-expressed as ``spark.sql`` over a
 temp view must produce (a) exactly the DataFrame path's rows and (b) the
 same physical plan shape — one Arrow crossing, one exchange — so a user
 writing declarative SQL gets the same scale properties as the DataFrame
@@ -12,11 +12,7 @@ import io
 from contextlib import redirect_stdout
 
 from wallaby2caom2_spark.plans import sql_api
-from wallaby2caom2_spark.plans.pipeline import (
-    RESULT_COLUMNS,
-    quality_filter,
-    run_metrics,
-)
+from wallaby2caom2_spark.plans.pipeline import RESULT_COLUMNS, quality_filter
 from wallaby2caom2_spark.queries.clips_flagship import load_clips
 
 SF = "/root/testdata/sf0.001"
@@ -60,18 +56,3 @@ def test_sql_path_same_plan_shape(spark):
     # the whole cascade stays in codegen — no extra Python stage appears
     for bad in ("BatchEvalPython", "ArrowEvalPython"):
         assert bad not in sql_plan, sql_plan
-
-
-def test_metrics_sql_identical(spark):
-    clips = load_clips(spark, SF)
-    result = quality_filter(clips)
-    df_metrics = {
-        r["outcome"]: (r["clips"], r["scrub_edits"], r["kept"])
-        for r in run_metrics(result).collect()
-    }
-    result.createOrReplaceTempView("clip_results")
-    sql_metrics = {
-        r["outcome"]: (r["clips"], r["scrub_edits"], r["kept"])
-        for r in spark.sql(sql_api.metrics_sql()).collect()
-    }
-    assert sql_metrics == df_metrics

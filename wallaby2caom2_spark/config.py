@@ -42,25 +42,6 @@ class RuleThresholds:
     max_perplexity: float = 12_000.0
 
 
-# Cascade rule names, in evaluation order. First match wins; the name is the
-# ``drop_reason``. Order is part of the contract (tests pin it).
-RULE_ORDER: tuple[str, ...] = (
-    "codec_invalid",
-    "decode_failed",
-    "sr_mismatch",
-    "duration_mismatch",
-    "audio_silence",
-    "audio_clipping",
-    "audio_dropout",
-    "too_short",
-    "too_long",
-    "repetition",
-    "perplexity_high",
-    "lang_not_allowed",
-    "langid_low_conf",
-)
-
-
 @dataclass(frozen=True)
 class PipelineConfig:
     """Everything a run needs, declaratively (reference analog:

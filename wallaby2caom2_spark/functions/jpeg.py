@@ -102,10 +102,6 @@ def _build_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], in
     return {(ln, code): sym for sym, (code, ln) in _build_codes(bits, vals).items()}
 
 
-_DC_DECODE = _build_decoder(DC_BITS, DC_VALS)
-_AC_DECODE = _build_decoder(AC_BITS, AC_VALS)
-
-
 def _category(v: int) -> int:
     return int(v).bit_length() if v > 0 else int(-v).bit_length()
 

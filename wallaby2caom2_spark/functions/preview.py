@@ -8,20 +8,17 @@ waveform-envelope thumbnail of the decoded PCM, encoded as an actual PNG.
 
 No imaging library is needed: PNG encoding of 8-bit grayscale is signature +
 IHDR + zlib-deflated filter-prefixed rows + IEND, all stdlib (``zlib`` /
-``struct``). The decoder below exists for tests (round-trip verification) —
-it only handles what the encoder emits (filter 0, colortype 0, bit depth 8).
+``struct``), through the one codec in functions/png.py, whose
+``decode_png`` reads the previews back.
 
 Everything is deterministic: same samples → byte-identical PNG.
 """
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 import numpy as np
 
-from .png import _PNG_SIG, encode_png
+from .png import encode_png
 
 THUMB_W = 256  # matches the reference's _prev_256 naming
 THUMB_H = 64
@@ -34,28 +31,6 @@ def encode_png_gray(img: np.ndarray) -> bytes:
     if img.ndim != 2 or img.dtype != np.uint8:
         raise ValueError("expected (h, w) uint8")
     return encode_png(img)
-
-
-def decode_png_gray(data: bytes) -> np.ndarray:
-    """Inverse of :func:`encode_png_gray` (test helper; filter-0 gray only)."""
-    if not data.startswith(_PNG_SIG):
-        raise ValueError("not a PNG")
-    pos, w, h, idat = len(_PNG_SIG), 0, 0, b""
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack_from(">I", data, pos)
-        tag = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + length]
-        if tag == b"IHDR":
-            w, h, depth, ctype = struct.unpack_from(">IIBB", body)
-            if depth != 8 or ctype != 0:
-                raise ValueError("only 8-bit grayscale supported")
-        elif tag == b"IDAT":
-            idat += body
-        pos += 12 + length
-    rows = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, w + 1)
-    if (rows[:, 0] != 0).any():
-        raise ValueError("unexpected PNG filter")
-    return rows[:, 1:].copy()
 
 
 def waveform_envelope(samples: np.ndarray, width: int = THUMB_W) -> np.ndarray:

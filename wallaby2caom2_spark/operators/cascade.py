@@ -3,10 +3,11 @@
 Direct analog of the reference's first-match-wins product-type cascade
 (``wallaby2caom2/storage_name.py:101-114``: ``.rms.``→NOISE, ``.png``→PREVIEW,
 model-table names→AUXILIARY, else SCIENCE — duplicated at
-``wallaby2caom2/main_app.py:170-184``), generalized to the 13 quality rules of
-config.RULE_ORDER. The whole cascade is ONE ``F.when`` chain → stays inside
-whole-stage codegen; transcript shape stats (length, word counts, repetition
-ratio) are built-in string/array functions, not UDFs.
+``wallaby2caom2/main_app.py:170-184``), generalized to 13 quality rules
+(their order is pinned in tests/test_cascade.py). The whole cascade is ONE
+``F.when`` chain → stays inside whole-stage codegen; transcript shape stats
+(length, word counts, repetition ratio) are built-in string/array
+functions, not UDFs.
 """
 
 from __future__ import annotations

@@ -1,10 +1,9 @@
 """Spark SQL entry path for the flagship cascade — declarative parity.
 
-The engine is DataFrame-API-first, but the cascade + metrics are pure
-relational logic a user would just as naturally write as SQL over a view.
-This module expresses EXACTLY the pipeline's codegen stages
-(operators/cascade.py ``label``: with_transcript_stats + with_keep_drop +
-mask_scrub; plans/pipeline.py run_metrics) as SQL
+The engine is DataFrame-API-first, but the cascade is pure relational
+logic a user would just as naturally write as SQL over a view. This module
+expresses EXACTLY the pipeline's codegen stages (operators/cascade.py
+``label``: with_transcript_stats + with_keep_drop + mask_scrub) as SQL
 text over a temp view of the fused-feature stage output, so the
 declarative path users actually write produces the same rows AND the same
 physical plan shape (one Arrow crossing, one salted exchange) as the
@@ -17,7 +16,7 @@ SQL here.
 
 Reference analog: the reference drives its cascade from config
 (``config/config.yml``) through imperative visitors; here the same
-declarative rule order (config.RULE_ORDER) renders to either API surface
+declarative rule order renders to either API surface
 from ONE threshold source (config.PipelineConfig), so the two spellings
 cannot drift.
 """
@@ -102,18 +101,6 @@ SELECT clip_id,
        lang, lang_conf, ppl, pcm_ok, sr_meas, dur_ms_meas, rms,
        clip_rate, dropout_ms
 FROM labeled
-"""
-
-
-def metrics_sql(view: str = "clip_results") -> str:
-    """run_metrics (plans/pipeline.py:122) as SQL over a results view."""
-    return f"""
-SELECT coalesce(drop_reason, 'kept') AS outcome,
-       count(*) AS clips,
-       sum(scrub_edits) AS scrub_edits,
-       coalesce(drop_reason, 'kept') = 'kept' AS kept
-FROM {view}
-GROUP BY coalesce(drop_reason, 'kept')
 """
 
 
